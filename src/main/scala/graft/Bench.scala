@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -26,11 +30,7 @@ object Bench {
     // way to recover the query's actual cost. All runs execute fully
     // (count() action).
     val runs = 3
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val failures = Seq.newBuilder[(String, Throwable)]
     // Host-storm canary: the SAME byte-identical trivial plan sampled at
     // suite start, middle and end. Its dispersion (max/min across the
     // three checkpoints, permille) is the measured same-plan host-window
@@ -39,19 +39,22 @@ object Bench {
     // normalize drift that is storm, not plan (r19 ask #4). min-of-3 per
     // checkpoint damps scheduler spikes while keeping minutes-scale
     // window drift visible.
-    def canarySample(): Double = (1 to 5).map { _ =>
-      val t0 = System.nanoTime()
-      try spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val canary: (SparkSession, String) => DataFrame = (s, dir) =>
+      s.read.parquet(s"$dir/lineitem.parquet")
         .groupBy("l_returnflag")
         .agg(org.apache.spark.sql.functions.sum("l_quantity"),
           org.apache.spark.sql.functions.avg("l_extendedprice"),
           org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
-        .count()
-      catch { case _: Throwable => }
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    def runHalf(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
-      qs.map { case (name, fn) => name -> (1 to runs).map(_ => timeOnce(fn)).min }
+    def canarySample(): Double = {
+      val (t, failed) = timeQueries(spark, sfDir, Seq("canary" -> canary), 5)
+      failures ++= failed
+      t.headOption.fold(Double.NaN)(_._2)
+    }
+    def runHalf(qs: Seq[(String, (SparkSession, String) => DataFrame)]) = {
+      val (t, failed) = timeQueries(spark, sfDir, qs, runs)
+      failures ++= failed
+      t
+    }
     val qseq = SparkEntry.queries.toSeq.sortBy(_._1)
     val (half1, half2) = qseq.splitAt(qseq.size / 2)
     val canaryStart = canarySample()
@@ -60,6 +63,14 @@ object Bench {
     val results2 = runHalf(half2)
     val canaryEnd = canarySample()
     val results = results1 ++ results2
+    val failed = failures.result()
+    if (failed.nonEmpty) {
+      // a failed query has no timing: no bench line, no detail artifact
+      failed.foreach { case (name, e) => System.err.println(s"bench query $name failed: $e") }
+      System.err.println(s"bench failed: ${failed.map(_._1).distinct.mkString(", ")}")
+      spark.stop()
+      sys.exit(1)
+    }
     val canaries = Seq(canaryStart, canaryMid, canaryEnd)
     val hostFactorPm = math.round(1000.0 * canaries.max / math.max(canaries.min, 1e-9))
     val total = results.map(_._2).sum
@@ -93,5 +104,30 @@ object Bench {
       System.err.println(s"BENCH_DETAIL.json write failed: $e") }
     println(line)
     spark.stop()
+  }
+
+  /** Min-of-`runs` wall seconds per query, each run forced with
+    * `count()`. A query that throws gets no timing: its remaining runs
+    * are skipped and it is returned among the failures instead, so an
+    * early exception is never recorded as a fast query. */
+  private[graft] def timeQueries(
+      spark: SparkSession, sfDir: String,
+      qs: Seq[(String, (SparkSession, String) => DataFrame)],
+      runs: Int): (Seq[(String, Double)], Seq[(String, Throwable)]) = {
+    val timed = qs.map { case (name, fn) =>
+      var best = Double.PositiveInfinity
+      var failure: Option[Throwable] = None
+      var i = 0
+      while (i < runs && failure.isEmpty) {
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).count()
+          best = math.min(best, (System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) => failure = Some(e) }
+        i += 1
+      }
+      name -> failure.toLeft(best)
+    }
+    (timed.collect { case (n, Right(t)) => n -> t }, timed.collect { case (n, Left(e)) => n -> e })
   }
 }

@@ -268,19 +268,13 @@ object GraftVecOps {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Spark's `round(double)` → `cast(long)` chain: BigDecimal HALF_UP for
-    * finite values (round-half-AWAY-FROM-ZERO — `math.round` would differ
-    * on negative .5 boundaries), NaN → 0 and ±Inf saturating exactly as
-    * the double→long Cast does. */
-  private[graft] def roundAsSpark(x: Double): Long = {
-    if (java.lang.Double.isNaN(x)) 0L
-    else if (java.lang.Double.isInfinite(x)) {
-      if (x > 0) Long.MaxValue else Long.MinValue
-    } else {
-      java.math.BigDecimal.valueOf(x)
-        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
-    }
-  }
+  /** Spark's `round(double)` → `cast(long)` chain: Spark's HALF_UP
+    * rounding at scale 0 ([[GraftRoundOps.roundHalfUp]]; round-half-AWAY-
+    * FROM-ZERO — `math.round` would differ on negative .5 boundaries),
+    * then `toLong`, which maps NaN → 0 and saturates ±Inf exactly as the
+    * double→long Cast does. */
+  private[graft] def roundAsSpark(x: Double): Long =
+    GraftRoundOps.roundHalfUp(x, 0).toLong
 
   /** Coarse-quantizer residual of one vector: `out(j) = v(j) −
     * cents(cell·dim + j)` — element-wise exact IEEE subtraction against a

@@ -1,5 +1,6 @@
 package graft.transforms
 
+import graft.functions.GraftRoundOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -22,12 +23,18 @@ import org.apache.spark.sql.functions._
   * the rounded grid — two cells collide only if their coordinates differ
   * beyond 6 decimals, which the normalization contract excludes. A NULL
   * coordinate yields a NULL key, which never equi-joins — exactly the
-  * NULL behavior of the two-column join it replaces. */
+  * NULL behavior of the two-column join it replaces.
+  *
+  * The `round(c·10⁶)` is [[graft.functions.GraftRoundOps.round]] at scale
+  * 0: it takes the nearest integer of the product directly and calls
+  * Spark's `BigDecimal` rounding only within a few ulps of a .5 tie, and
+  * `GraftRoundOpsSpec` proves it bit-identical to Spark's `round`, so the
+  * packed keys are unchanged. */
 object CellKey {
 
   def pack(lat: Column, lon: Column): Column =
-    (round(lat * 1000000).cast("long") + 90000000L) * 360000001L +
-      (round(lon * 1000000).cast("long") + 180000000L)
+    (GraftRoundOps.round(lat * 1000000, 0).cast("long") + 90000000L) * 360000001L +
+      (GraftRoundOps.round(lon * 1000000, 0).cast("long") + 180000000L)
 
   /** Equi-join `left` with the per-cell dimension `right` on the packed
     * key. `left` keeps its (latitude, longitude) columns; `right`'s are

@@ -1,10 +1,17 @@
 package graft.transforms
 
+import graft.functions.GraftRoundOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Grid-cell geometry helpers: WKT polygons for GIS serving and point→cell
   * snapping for the serving-side lookup.
+  *
+  * Every `round` here is [[graft.functions.GraftRoundOps.round]], the
+  * exact kernel: for a double it returns Spark's `round` bit for bit
+  * (HALF_UP on `Double.toString`'s decimal, `+0.0` for zero) and falls back to
+  * Spark's own `BigDecimal` path near a tie, so snapped keys and WKT
+  * strings are unchanged; other input types keep Spark's `Round`.
   */
 object Geometry {
 
@@ -17,10 +24,10 @@ object Geometry {
     * codegen'd string concat — no geometry library, no UDF.
     */
   def addWkt(df: DataFrame, halfGridSize: Double, precision: Int): DataFrame = {
-    val minLat = round(col("latitude") - halfGridSize, precision)
-    val maxLat = round(col("latitude") + halfGridSize, precision)
-    val minLon = round(col("longitude") - halfGridSize, precision)
-    val maxLon = round(col("longitude") + halfGridSize, precision)
+    val minLat = GraftRoundOps.round(col("latitude") - halfGridSize, precision)
+    val maxLat = GraftRoundOps.round(col("latitude") + halfGridSize, precision)
+    val minLon = GraftRoundOps.round(col("longitude") - halfGridSize, precision)
+    val maxLon = GraftRoundOps.round(col("longitude") + halfGridSize, precision)
     def pt(lon: Column, lat: Column): Column = concat(lon, lit(" "), lat)
     df.withColumn(
       "wkt",
@@ -38,7 +45,7 @@ object Geometry {
     * `floor(x / resolution) * resolution`, rounded to `precision`.
     * (reference: databricks/flood-api-examples.py:83-120, python-side) */
   def snapToCellFloor(c: Column, resolution: Double, precision: Int): Column =
-    round(floor(c / resolution) * resolution, precision)
+    GraftRoundOps.round(floor(c / resolution) * resolution, precision)
 
   /** Snap to the cell center (the engine's canonical cell key): lower
     * bound + half a cell. Aligning both sides of a join onto cell centers
@@ -46,7 +53,7 @@ object Geometry {
     * (reference: flood/etl/filter_by_upstream.py:21-23; regular-grid
     * assumption documented in SURVEY §2.3 J7). */
   def snapToCellCenter(c: Column, resolution: Double, precision: Int): Column =
-    round(floor(c / resolution) * resolution + resolution / 2.0, precision)
+    GraftRoundOps.round(floor(c / resolution) * resolution + resolution / 2.0, precision)
 
   /** Integer cell index from a rounded-3 coordinate: milli-degrees
     * relative to `originDeg`, divided by the cell size in milli-degrees.
@@ -56,8 +63,8 @@ object Geometry {
   def cellIndex(c: Column, originDeg: Int, cellMillideg: Int): Column =
     // origin shift keeps the dividend non-negative, so floor == truncate
     // on both engines; floor() because Spark's long / int promotes to double
-    floor((round(c * 1000).cast("long") + originDeg.toLong * 1000) / cellMillideg)
-      .cast("long")
+    floor((GraftRoundOps.round(c * 1000, 0).cast("long") + originDeg.toLong * 1000) /
+      cellMillideg).cast("long")
 
   /** Z-order (Morton) key: interleaves the low `bits` of the two cell
     * indices (lat bits odd, lon bits even). Sorting/range-partitioning

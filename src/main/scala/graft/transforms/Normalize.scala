@@ -1,5 +1,6 @@
 package graft.transforms
 
+import graft.functions.GraftRoundOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,6 +12,10 @@ import org.apache.spark.sql.functions._
   *    This is load-bearing — every downstream join is an equality on the
   *    rounded doubles; unrounded keys silently produce empty joins
   *    (pinned by reference test test_spark_transforms.py:55-84).
+  *    The rounding runs through [[graft.functions.GraftRoundOps.round]]:
+  *    bit-identical to Spark's `round` (same HALF_UP decimal semantics,
+  *    type and nullability, proved in `GraftRoundOpsSpec`), but without a
+  *    `BigDecimal` per row on the values that are not near a tie.
   *  - `issued_on` = date of `time` (ns since epoch).
   *  - `step` ns → whole days as Int.
   *  - `valid_for` = date of `valid_time` minus one day (the 24h-mean
@@ -20,8 +25,8 @@ object Normalize {
 
   /** Round the spatial join keys. Applied to every table before any join. */
   def roundKeys(df: DataFrame, precision: Int): DataFrame =
-    df.withColumn("latitude", round(col("latitude"), precision))
-      .withColumn("longitude", round(col("longitude"), precision))
+    df.withColumn("latitude", GraftRoundOps.round(col("latitude"), precision))
+      .withColumn("longitude", GraftRoundOps.round(col("longitude"), precision))
 
   /** Full raw-forecast normalization: key rounding + time derivations +
     * NA-drop of masked-out discharge (the upstream mask writes NaN→null
@@ -60,8 +65,8 @@ object Normalize {
     val stepDays = (col("step_hours") / lit(24)).cast("int")
     val cols = Seq(
       col("number").cast("long").as("number"),
-      round(col("latitude"), precision).as("latitude"),
-      round(col("longitude"), precision).as("longitude"),
+      GraftRoundOps.round(col("latitude"), precision).as("latitude"),
+      GraftRoundOps.round(col("longitude"), precision).as("longitude"),
       issued.as("issued_on"),
       stepDays.as("step"),
       date_add(issued, stepDays - 1).as("valid_for"),

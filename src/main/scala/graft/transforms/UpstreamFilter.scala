@@ -32,9 +32,12 @@ object UpstreamFilter {
     * >= `threshold` m². `uparea` must carry (latitude, longitude, uparea).
     *
     * Formulated as a left-semi join on cell-snapped keys: the dimension
-    * side is filtered first (so only qualifying cells shuffle — on the
-    * global 0.05° grid that is a few hundred thousand rows, well under
-    * broadcast threshold), and no uparea column survives, matching the
+    * side is filtered first and carries an explicit `broadcast()` hint
+    * (on the global 0.05° grid the qualifying cells are a few hundred
+    * thousand rows), so the fact side never shuffles for this join,
+    * whatever `autoBroadcastJoinThreshold` the session runs with — the
+    * same posture as [[graft.pipeline.ForecastPipeline.run]]'s threshold
+    * and control joins. No uparea column survives, matching the
     * reference's mask + dropna (flood/etl/raster_converter.py:44-45).
     */
   def apply(
@@ -53,7 +56,7 @@ object UpstreamFilter {
       .select("cell_lat", "cell_lon")
 
     snapped(discharge)
-      .join(qualifying, Seq("cell_lat", "cell_lon"), "left_semi")
+      .join(broadcast(qualifying), Seq("cell_lat", "cell_lon"), "left_semi")
       .drop("cell_lat", "cell_lon")
   }
 }

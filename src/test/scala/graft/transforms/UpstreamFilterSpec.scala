@@ -44,6 +44,23 @@ class UpstreamFilterSpec extends SparkSpec {
     assert(got.count() === chosen.size * 6L)
   }
 
+  test("the qualifying-cell side is broadcast even with auto-broadcast off") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try {
+      val discharge = Seq((1L, 5.725, 28.975, 1L, 100.0f), (1L, 5.675, 29.025, 1L, 50.0f))
+        .toDF("number", "latitude", "longitude", "step", "dis24")
+      val uparea = Seq((5.725, 28.975, 300000.0), (5.675, 29.025, 1000.0))
+        .toDF("latitude", "longitude", "uparea")
+      val got = UpstreamFilter(discharge, uparea, threshold = 250000.0,
+        resolution = 0.05, precision = 3)
+      assert(got.count() === 1L)
+      val plan = got.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"), plan)
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"), plan)
+    } finally spark.conf.unset(key)
+  }
+
   test("ROI restriction keeps the buffer margin") {
     val df = Seq(
       (17.01, 0.0), // inside buffer (buffer = 0.0125)
