@@ -7,17 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as nanos longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Untimed warmup: the first action in a session pays job-infra +
     // codegen startup (~3 s) that would otherwise pollute whichever query
     // happens to run first.
@@ -96,7 +86,7 @@ object Bench {
     // and the stdout line — the only thing the driver's ~2000-char tail
     // window sees — degrades 2-dec -> centiseconds -> bounded totals+
     // digest form, so it stays parseable JSON at ANY registry size.
-    val (line, detail) = BenchFormat.render(results, total, sfName, cpus.toInt, gate)
+    val (line, detail) = BenchFormat.render(results, total, sfName, LocalSession.cpus, gate)
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json", "UTF-8")
       try w.print(detail) finally w.close()

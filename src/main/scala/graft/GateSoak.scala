@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.CorpusStream
 
@@ -46,14 +45,7 @@ object GateSoak {
     // candidates-only hs reads pay off. `inflate` repeats each text so
     // the soak can measure at a realistic bytes-per-doc.
     val inflate = if (args.length > 4) args(4).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     val rawDocs = spark.read.parquet(docsPath)
     // inflate with alphabet-rotated copies: each copy contributes its own

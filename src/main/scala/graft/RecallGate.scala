@@ -7,16 +7,13 @@ import org.apache.spark.sql.functions._
 import graft.llm.{Pq, Similarity}
 
 /** Compact ANN-recall regression gate, surfaced into the per-round BENCH
-  * artifact (the round-18 verdict ask: the C1 recall floor lived only in
-  * the `ProfileC1` harness, so a quantizer/probe-rule/re-rank regression
-  * failed the round only if someone read SCALE.md — this makes it
-  * mechanical: `recall_floor_ok` rides the bench JSON the driver parses
-  * every round).
+  * artifact: a quantizer/probe-rule/re-rank regression fails the round
+  * mechanically, because `recall_floor_ok` rides the bench JSON the
+  * driver parses every round.
   *
-  * Same synthetic distribution and serving paths as C1's `ann_recall`
-  * stage ([[ProfileC1.syntheticEmbeddings]]: near-dup groups of 17 over
-  * an isotropic tail — the worst case for quantized search), scaled down
-  * to a bench-budget corpus. Two measurements:
+  * Synthetic corpus ([[syntheticEmbeddings]]: near-dup groups of 17 over
+  * an isotropic tail — the worst case for quantized search) at a
+  * bench-budget size. Two measurements:
   *
   *  - `recall_r10_ad` / `recall_r100_ad`: the PRODUCTION adaptive shape
   *    ([[Pq.ivfPqSearchRerankAdaptive]], budget = 75% of the corpus,
@@ -27,9 +24,13 @@ import graft.llm.{Pq, Similarity}
   * Floors are regression pins = measured band minus slack, NOT
   * aspirations (measured at the default 20k-vector bench scale:
   * ad 993/979, p16 662/340 — the deterministic xxhash corpus makes the
-  * measurement exactly reproducible; the C1 harness pins the full-scale
-  * band, 1M adaptive 934/700+). A floor breach sets `recall_floor_ok:0`
-  * in BENCH_r{N}.json, failing the round by name. */
+  * measurement exactly reproducible; [[main]] pins the full-scale band
+  * against the SCALE floors). A floor breach sets `recall_floor_ok:0`
+  * in BENCH_r{N}.json, failing the round by name.
+  *
+  * `sbt 'runMain graft.RecallGate [nVecs]'` (default 1 000 000) runs only
+  * the scale pin: [[measureScale]] at `nVecs`, the metrics printed on one
+  * line with `scale_floor_ok`, exit status 1 on a floor breach. */
 object RecallGate {
 
   val FloorR10Adaptive = 950L
@@ -37,8 +38,8 @@ object RecallGate {
   val FloorR10Adc16 = 550L
   val FloorR100Adc16 = 250L
 
-  /** Floors for the 1M-VECTOR scale curve (`ProfileC1` recall-only mode,
-    * re-measured per round — BASELINE.md): the same measurement at the
+  /** Floors for the 1M-VECTOR scale curve ([[main]], re-measured per
+    * round — BASELINE.md): the same measurement at the
     * scale where probe COVERAGE, not ADC ordering, is the binding
     * constraint. Regression pins = measured band minus slack (r20
     * measured: see BASELINE.md), not aspirations. */
@@ -46,6 +47,30 @@ object RecallGate {
   val ScaleFloorR100Adaptive = 650L
   val ScaleFloorR10Adc16 = 550L
   val ScaleFloorR100Adc16 = 180L
+
+  /** Deterministic synthetic 64-dim embeddings `(vec_id, embedding)`:
+    * near-dup groups of 17 consecutive ids around a shared xxhash center,
+    * each member offset by a small per-id jitter. */
+  private[graft] def syntheticEmbeddings(spark: SparkSession, n: Long): DataFrame =
+    spark.range(n).select(
+      col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(64)),
+        i => ((pmod(abs(xxhash64(floor(col("id") / 17).cast("long"), i)), lit(2000L)) - 1000L) / 1000.0
+          + (pmod(abs(xxhash64(col("id"), i)), lit(11L)) - 5L) * 0.001)
+          .cast("float")).as("embedding"))
+
+  def main(args: Array[String]): Unit = {
+    val nVecs = if (args.nonEmpty) args(0).toLong else 1000000L
+    val spark = LocalSession()
+    val t0 = System.nanoTime()
+    val (metrics, ok) = measureScale(spark, nVecs)
+    val secs = (System.nanoTime() - t0) / 1e9
+    println(f"[recall-gate] vecs=$nVecs%d $secs%.1f s  " +
+      metrics.map { case (k, v) => s"$k=$v" }.mkString("  ") +
+      s"  scale_floor_ok=${if (ok) 1 else 0}")
+    spark.stop()
+    if (!ok) sys.exit(1)
+  }
 
   /** The 1M scale pin: measure at `nVecs` and gate on the SCALE floors. */
   def measureScale(spark: SparkSession, nVecs: Long): (Seq[(String, Long)], Boolean) = {
@@ -60,7 +85,7 @@ object RecallGate {
 
   /** Returns the permille metrics plus the floor verdict. */
   def measure(spark: SparkSession, nVecs: Long): (Seq[(String, Long)], Boolean) = {
-    val embs = ProfileC1.syntheticEmbeddings(spark, nVecs).localCheckpoint()
+    val embs = syntheticEmbeddings(spark, nVecs).localCheckpoint()
     val (coarse, pq) = Pq.ivfPqTrain(embs, "vec_id", "embedding",
       dim = 64, cells = 64, m = 8, k = 64)
     val index = Pq.ivfPqEncode(embs, "vec_id", "embedding", coarse, pq)
@@ -101,10 +126,10 @@ object RecallGate {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("arank"))
       .localCheckpoint()
     val sizes = Pq.cellOccupancy(index)
-    // candidate cut scales with the budget (the C1 sizing rule: ~5% of
-    // the probed budget, floor 5001) so the same measurement serves both
-    // the 20k bench gate (5001, unchanged) and the 1M scale pin, where a
-    // fixed 5001 would bind before probe coverage does
+    // candidate cut scales with the budget (~5% of the probed budget,
+    // floor 5001) so the same measurement serves both the 20k bench gate
+    // (5001, unchanged) and the 1M scale pin, where a fixed 5001 would
+    // bind before probe coverage does
     val adCand = math.max(5001L, nVecs * 3 / 4 / 20).min(100001L).toInt
     val ad = ranked(Pq.ivfPqSearchRerankAdaptive(index, coarse, pq, embs,
       "vec_id", "embedding", queries, candidateBudget = nVecs * 3 / 4,

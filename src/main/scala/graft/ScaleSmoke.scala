@@ -49,8 +49,8 @@ object ScaleSmoke {
       precision)
   }
 
-  /** Driver JVM peak RSS (VmHWM) in MB; −1 outside Linux. Shared by the
-    * profiling mains. */
+  /** Driver JVM peak RSS (VmHWM) in MB; −1 outside Linux. Shared with
+    * [[StreamSoak]]. */
   private[graft] def peakRssMb(): Long = {
     val src = scala.io.Source.fromFile("/proc/self/status")
     try src.getLines().collectFirst {
@@ -60,7 +60,6 @@ object ScaleSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Deliberately DEFAULT conf beyond the local-mode basics: the measured
     // scale plan (dimension broadcasts, one-pass summary, step-clustered
     // exchange-free aggregation) must come from the LIBRARY — explicit
@@ -68,19 +67,11 @@ object ScaleSmoke {
     // bucketing flag itself — not from tool-side session tuning. Round-11
     // carried autoBroadcastJoinThreshold/bucketing conf here; round 12
     // graduated both into the pipeline, and this smoke proves it. The one
-    // non-default line is `spark.sql.extensions` — the library's documented
-    // install hook (cluster deployments set the same conf), which carries
-    // the physical rewrites (CollapsePercentiles,
+    // non-default line of [[LocalSession]] is `spark.sql.extensions` — the
+    // library's documented install hook (cluster deployments set the same
+    // conf), which carries the physical rewrites (CollapsePercentiles,
     // CompleteClusteredAggregate), not tuning values.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // A/B attribution hook for the complete-mode rewrite (dev-only; the
     // library default is on — see CompleteClusteredAggregate.EnabledKey)
     sys.env.get("GRAFT_COMPLETE_AGG").foreach(v =>
@@ -119,7 +110,7 @@ object ScaleSmoke {
         // so the 985M-row pre-aggregation exchange disappears (the
         // day-job shape: 30 steps ≈ the core count; a multi-month corpus
         // would pass clusterByStep = false and keep cell-balanced slices)
-        (glob, ForecastPipeline.readGrib(spark, glob, cfg, numPartitions = cpus.toInt),
+        (glob, ForecastPipeline.readGrib(spark, glob, cfg, numPartitions = LocalSession.cpus),
           syntheticThresholds(spark, cfg.precision))
       case None =>
         val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -1,18 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local replica of the driver's t1 smoke: run SparkEntry.entry and print
   * its row count (driver requires > 0) plus the first rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val df = SparkEntry.entry(spark)
     df.show(5, truncate = false)
     println(s"entry rows: ${df.count()}")

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path => JPath, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.ForecastStream
 
@@ -40,14 +39,7 @@ object StreamSoak {
     val maxFiles = if (args.length > 2) args(2).toInt else 10
     val stopAfter = if (args.length > 3) args(3).toInt else 10
     val idxCache = if (args.length > 4) Some(args(4)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     // batchId → (rows, valueSum): foreachBatch replays the last
     // un-committed batch on restart, so accumulation keys on batch id —
@@ -58,7 +50,7 @@ object StreamSoak {
       val opts = Map("fileLogCompactInterval" -> "10") ++
         idxCache.map("indexCacheDir" -> _)
       val stream = ForecastStream.readGrib(spark, glob,
-        numPartitions = cpus.toInt, maxFilesPerTrigger = maxFiles,
+        numPartitions = LocalSession.cpus, maxFilesPerTrigger = maxFiles,
         options = opts)
       val t0 = System.nanoTime()
       val batchesBefore = perBatch.size()

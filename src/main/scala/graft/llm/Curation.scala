@@ -72,24 +72,12 @@ object CurationArtifacts {
   */
 object Curation {
 
-  /** Clustering form the curation gates use by default: the
-    * diameter-independent star contraction ([[Dedup.clustersStar]]).
-    * Production corpora are exactly where a semi-dup chain ladder can
-    * give the pair graph a long diameter, so the O(log² n)-round form is
-    * the right default; the propagation form ([[Dedup.clusters]]) has
-    * the identical min-id contract, and every curate entry point takes
-    * the form as a parameter so the equality is spec-pinned, not
-    * assumed. */
-  val DefaultClusterFn: (DataFrame, DataFrame) => DataFrame =
-    Dedup.clustersStar(_, _)
-
   def curate(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       minQuality: Double = 0.4,
-      minJaccard: Double = 0.5,
-      clusterFn: (DataFrame, DataFrame) => DataFrame = DefaultClusterFn): DataFrame = {
+      minJaccard: Double = 0.5): DataFrame = {
     // Materialize only (doc_id, quality_score) — two narrow columns —
     // instead of re-running the tokenizing quality scorer for each of its
     // three consumers (gate, cluster universe, final verdict join). The
@@ -109,7 +97,7 @@ object Curation {
       .filter(col("quality_score") >= minQuality)
       .select(col("doc_id"), col(textCol).as("text"))
     val pairs = Dedup.minhashPairs(passing, "doc_id", "text", minJaccard = minJaccard)
-    val clustered = clusterFn(passingIds.select("doc_id"), pairs)
+    val clustered = Dedup.clusters(passingIds.select("doc_id"), pairs)
     scores
       .join(clustered, Seq("doc_id"), "left")
       .select(
@@ -139,10 +127,19 @@ object Curation {
     *
     * Scale shape: gates 2–4 are zero-shuffle kernel projections; gate 1
     * is one 32-byte-key window; gate 5 is the bucketed LSH + the
-    * diameter-independent star-contraction clustering (`clusterFn`,
-    * default [[DefaultClusterFn]]); the verdict joins five doc-keyed
-    * relations —
-    * every shuffle is id- or digest-keyed, nothing is all-pairs. */
+    * diameter-independent star-contraction clustering
+    * ([[Dedup.clusters]]); the verdict joins five doc-keyed relations —
+    * every shuffle is id- or digest-keyed, nothing is all-pairs.
+    *
+    * Input contract: `docs` must be DETERMINISTIC and stable across
+    * re-execution — the same rows with the same ids and texts every time
+    * it is evaluated. It is not materialized: about four gate subtrees
+    * (scored chain and trainers, exact window, MinHash, cluster universe)
+    * re-scan it, and the verdict joins them on doc_id, so an input that
+    * changes between scans (a `rand()` filter or sample, a source that
+    * moves under the read) silently drops or mislabels documents. Pass a
+    * pruned table scan, or materialize a non-deterministic upstream
+    * first. */
   def curateV2(
       docs: DataFrame,
       idCol: String,
@@ -151,8 +148,7 @@ object Curation {
       acceptLabels: Set[String],
       minQuality: Double = 0.4,
       minAvgLpMicros: Long = -3450000L,
-      minJaccard: Double = 0.5,
-      clusterFn: (DataFrame, DataFrame) => DataFrame = DefaultClusterFn): DataFrame = {
+      minJaccard: Double = 0.5): DataFrame = {
     require(acceptLabels.nonEmpty, "curateV2 needs at least one accept label")
     // NOT materialized (r22 — reverses r21's corpus-sized localCheckpoint
     // here): with gates 2–4 inlined into one scoring pass below, only ~4
@@ -193,7 +189,7 @@ object Curation {
           passThrough = Seq("text")),
         "doc_id", "text", passThrough = Seq("text", "predicted_label")),
       "doc_id", "text", passThrough = Seq("quality_score", "predicted_label"))
-    val reps = clusterFn(d.select(col("doc_id")),
+    val reps = Dedup.clusters(d.select(col("doc_id")),
       Dedup.minhashPairs(d, "doc_id", "text", minJaccard = minJaccard))
     scored
       .join(exact, Seq("doc_id"))
@@ -222,7 +218,11 @@ object Curation {
     * Scale posture is the union of the parts: the URL/domain derivation
     * is a kernel projection + one (domain) window cut to `perDomain`;
     * contamination is a broadcast bench-gram semi-join; everything else
-    * as [[curateV2]]. Returns (doc_id, keep, reason). */
+    * as [[curateV2]]. Returns (doc_id, keep, reason).
+    *
+    * Input contract: as [[curateV2]] — `docs` must be deterministic and
+    * stable across re-execution, because the gate subtrees re-scan it
+    * and join back on doc_id. */
   def curateV3(
       docs: DataFrame,
       idCol: String,
@@ -236,8 +236,7 @@ object Curation {
       minJaccard: Double = 0.5,
       perDomain: Int = 100,
       contaminationN: Int = 3,
-      maxContamination: Double = 0.2,
-      clusterFn: (DataFrame, DataFrame) => DataFrame = DefaultClusterFn): DataFrame = {
+      maxContamination: Double = 0.2): DataFrame = {
     require(acceptLabels.nonEmpty, "curateV3 needs at least one accept label")
     // NOT materialized + digest-projected exact gate: see curateV2's
     // re-scan A/B note (same shape, one more gate pair)
@@ -262,7 +261,7 @@ object Curation {
     val contam = Contamination.overlap(d, benchmark, "doc_id", "text",
       n = contaminationN, maxRatio = maxContamination)
       .select("doc_id", "contaminated")
-    val reps = clusterFn(d.select(col("doc_id")),
+    val reps = Dedup.clusters(d.select(col("doc_id")),
       Dedup.minhashPairs(d, "doc_id", "text", minJaccard = minJaccard))
     scored
       .join(exact, Seq("doc_id"))
@@ -327,8 +326,7 @@ object Curation {
       shingleK: Int = 5,
       perms: Int = 64,
       nBands: Int = 16,
-      rowsPerBand: Int = 4,
-      clusterFn: (DataFrame, DataFrame) => DataFrame = DefaultClusterFn): DataFrame = {
+      rowsPerBand: Int = 4): DataFrame = {
     require(acceptLabels.nonEmpty, "curateV2With needs at least one accept label")
     // Materialized, unlike curateV2's corpus (see its re-scan A/B note):
     // `drop` is an arbitrary caller frame (often not a pruned parquet
@@ -355,7 +353,7 @@ object Curation {
       "doc_id", "text", artifacts.lmUnigrams, artifacts.lmBigrams,
       passThrough = Seq("quality_score", "predicted_label"))
     // gate 5: in-drop clusters, then representatives vs history
-    val clusters = clusterFn(d.select(col("doc_id")),
+    val clusters = Dedup.clusters(d.select(col("doc_id")),
       Dedup.minhashPairs(d, "doc_id", "text",
         shingleK, perms, nBands, rowsPerBand, minJaccard))
       .localCheckpoint() // feeds rep selection + the verdict join

@@ -146,7 +146,7 @@ object Dedup {
     // two-stage shape against a fused single-join-pair form (sig and hs
     // attached together, conjunctive filters) measured the fused form
     // ~35% SLOWER at bench scale (1.66 vs 2.24 s min-of-5 alternating,
-    // ProfileAbR21) — and at scale the fused form also ships hs for
+    // OPTIMIZATION_r21.md) — and at scale the fused form also ships hs for
     // candidates that fail the screen. Narrower rows through the joins
     // beat fewer joins here.
     val screened = pairsM
@@ -224,107 +224,13 @@ object Dedup {
         HashFunctions.ngramHashes(col(textCol), n).as("hs")),
       perms, nBands, rowsPerBand, minJaccard, maxBucket, estSlack)
 
-  /** Connected components over a near-duplicate pair table: every document
-    * gets the minimum doc id reachable through pair edges as its
-    * `cluster_id` (singletons cluster with themselves). This is the step
-    * that turns pair detection into a dedup *decision* — keep one doc per
-    * cluster.
-    *
-    * Implementation is iterative min-label propagation: each round joins
-    * labels across edges and keeps the per-node minimum, until a round
-    * changes nothing. Rounds needed = graph diameter (near-dup clusters
-    * are shallow; large diameters indicate chained semi-dups and converge
-    * in O(log n) with this doubling-free form too). The driver-side loop
-    * is the standard shape for iterative graph algorithms on Spark (GraphX
-    * Pregel does the same); `localCheckpoint` cuts the growing lineage so
-    * plan size stays constant per round. The result (min id per component)
-    * is iteration-order independent, so the DuckDB oracle can compute it
-    * with a recursive-CTE transitive closure instead.
-    *
-    * @param docs  (doc_id) universe, including docs in no pair
-    * @param pairs (doc_a, doc_b) undirected near-dup edges
-    * @return (doc_id, cluster_id)
-    */
-  def clusters(
-      docs: DataFrame,
-      pairs: DataFrame,
-      maxRounds: Int = 100,
-      smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
-    // materialize the pair table once: BOTH union branches below and
-    // every round's join would otherwise re-execute the upstream
-    // pair-detection pipeline (LSH, verification, ...). The union itself
-    // stays lazy — a narrow double-scan of the materialized pairs.
-    // The pair count rides the checkpoint job as an observed metric and
-    // gates the small-graph driver path (see smallGraphLabels).
-    val obsP = new org.apache.spark.sql.Observation()
-    val p = pairs.select(col("doc_a"), col("doc_b"))
-      .observe(obsP, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val nPairs = obsP.get.apply("n").asInstanceOf[Long]
-    if (nPairs <= smallGraphMaxEdges && longIds(p, "doc_a", "doc_b")) {
-      val es = p.collect()
-      if (!es.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return labelJoin(docs,
-          smallGraphLabels(es.map(r => (r.getLong(0), r.getLong(1))), docs.sparkSession))
-    }
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // Iterate ONLY over nodes that touch an edge: a node in no pair can
-    // never change its label, so the corpus-sized universe would just ride
-    // through every round's join + groupBy unchanged. Near-dup pair graphs
-    // are sparse (most documents are singletons), so per-round state is
-    // |V(edges)| — at 100 TB that is the difference between iterating over
-    // the duplicate minority and re-shuffling the whole corpus each round.
-    // Singletons rejoin once, at the end, via coalesce.
-    // convergence via the label-sum invariant: a node's label only ever
-    // decreases under min propagation, so the sum strictly decreases until
-    // the fixpoint — one tiny aggregate per round instead of a diff join.
-    // Summed as decimal(38,0) so the invariant cannot wrap on Long ids;
-    // sum over zero rows is SQL NULL → 0 (an empty universe is already
-    // converged). The initial sum rides the initial checkpoint job as an
-    // observed metric, like every round's does.
-    val obs0 = new org.apache.spark.sql.Observation()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .observe(obs0, sum(col("cluster_id").cast("decimal(38,0)")).as("s"))
-      .localCheckpoint()
-    var prevSum = Option(obs0.get.apply("s"))
-      .map(_.asInstanceOf[java.math.BigDecimal])
-      .getOrElse(java.math.BigDecimal.ZERO)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val viaEdges = edges
-        .join(labels.withColumnRenamed("doc_id", "dst2"), col("dst") === col("dst2"))
-        .select(col("src").as("doc_id"), col("cluster_id"))
-      // ONE action per round: the label-sum invariant rides the
-      // checkpoint job as an observed metric (CollectMetrics) instead of
-      // a second job re-reading the checkpointed labels
-      val obs = new org.apache.spark.sql.Observation()
-      val next = labels.select(col("doc_id"), col("cluster_id"))
-        .union(viaEdges)
-        .groupBy("doc_id")
-        .agg(min("cluster_id").as("cluster_id"))
-        .observe(obs, sum(col("cluster_id").cast("decimal(38,0)")).as("s"))
-        .localCheckpoint()
-      val nextSum = Option(obs.get.apply("s"))
-        .map(_.asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      round += 1
-    }
-    labelJoin(docs, labels)
-  }
-
   /** Edge-count gate for the exact DRIVER-side component labeling in
     * [[smallGraphLabels]]: 65 536 canonical edges ≈ 1 MB collected — far
     * below the model tables and candidate-bucket sets the operators here
     * already collect (the bounded-driver-collect discipline of
     * [[graft.streaming.CorpusStream]] and [[Clustering]]'s driver-held
     * centroids). Above the gate, or for non-long ids, the distributed
-    * loops run unchanged. */
+    * star loop runs. */
   val SmallGraphMaxEdges: Long = 65536L
 
   private def longIds(df: DataFrame, a: String, b: String): Boolean =
@@ -334,13 +240,13 @@ object Dedup {
   /** Exact min-id connected components of a SMALL edge set on the
     * driver: union-find whose union always points the LARGER root at the
     * smaller, so every root IS its component's minimum id — literally
-    * the fixpoint the distributed loops iterate toward, without their
+    * the fixpoint the distributed loop iterates toward, without its
     * per-round checkpoint actions and exchanges (the sf0.1 scaling pin
-    * measured the loops job-floor-bound: 8-core ≈ 32-core until the
+    * measured the loop job-floor-bound: 8-core ≈ 32-core until the
     * graph outgrows the driver anyway). Returns the (doc_id, cluster_id)
     * rows for nodes that touch an edge, as a LOCAL relation — the
     * universe join against it broadcasts instead of shuffling. Result is
-    * identical to the loops' (min reachable id; iteration-order
+    * identical to the loop's (min reachable id; iteration-order
     * independent), so the same oracles pin it. */
   private def smallGraphLabels(
       edges: Array[(Long, Long)],
@@ -376,35 +282,49 @@ object Dedup {
           org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
-  /** Shared tail of the clustering forms: re-attach singletons by a left
-    * join of the universe against the edge-node labels. */
+  /** Shared tail of both [[clusters]] paths: re-attach singletons by a
+    * left join of the universe against the edge-node labels. */
   private def labelJoin(docs: DataFrame, labels: DataFrame): DataFrame =
     docs.select(col("doc_id"))
       .join(labels.withColumnRenamed("cluster_id", "edge_cluster_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("edge_cluster_id"), col("doc_id")).as("cluster_id"))
 
-  /** [[clusters]] with DIAMETER-INDEPENDENT round count: alternating
+  /** Connected components over a near-duplicate pair table: every document
+    * gets the minimum doc id reachable through pair edges as its
+    * `cluster_id` (singletons cluster with themselves). This is the step
+    * that turns pair detection into a dedup *decision* — keep one doc per
+    * cluster. The result (min id per component) is iteration-order
+    * independent, so the DuckDB oracle computes it with a recursive-CTE
+    * transitive closure.
+    *
+    * Graphs of at most `smallGraphMaxEdges` canonical edges over long ids
+    * are labeled on the driver ([[smallGraphLabels]]). The rest run alternating
     * large-star / small-star contraction (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14 — a public algorithm,
-    * re-expressed as DataFrame aggregations). Same contract and same
-    * result as [[clusters]] (min doc_id per component), so it rides the
-    * identical oracle; use it when the pair graph may contain long chains
-    * (semi-dup ladders), where min-label propagation needs one round per
-    * hop but star contraction converges in O(log^2 n) rounds regardless
-    * of diameter — the 100 TB guard against a pathological component.
+    * re-expressed as DataFrame aggregations), whose round count is
+    * O(log^2 n) regardless of diameter: a semi-dup chain ladder costs no
+    * more rounds than a star. A graph that has not converged after
+    * `maxRounds` rounds fails with an `IllegalArgumentException` naming
+    * the cap — never returns partial labels.
     *
     * Each round is two rounds of (groupBy-min + self-join) over the edge
     * set, state O(|edges|); edges stay canonical (larger, smaller), so a
     * star fixpoint is literally (member, component-min) and convergence
     * is a tiny (count, hash-sum) aggregate per round, not an except-diff.
+    * The driver-side loop with a `localCheckpoint` per round keeps the
+    * plan size constant per round.
     *
     *  - large-star: every node attaches its LARGER neighbors to the
     *    minimum of its closed neighborhood — long tails fold toward the
     *    min in parallel;
     *  - small-star: every node re-points its smaller-or-equal closure at
     *    that minimum — stars flatten.
+    *
+    * @param docs  (doc_id) universe, including docs in no pair
+    * @param pairs (doc_a, doc_b) undirected near-dup edges
+    * @return (doc_id, cluster_id)
     */
-  def clustersStar(
+  def clusters(
       docs: DataFrame,
       pairs: DataFrame,
       maxRounds: Int = 50,
@@ -480,7 +400,7 @@ object Dedup {
       edges = nextM
       round += 1
     }
-    require(converged, s"clustersStar did not converge in $maxRounds rounds " +
+    require(converged, s"clusters did not converge in maxRounds = $maxRounds rounds " +
       "— raise maxRounds (star contraction needs O(log^2 n))")
     // star fixpoint: edges are exactly (member, component-min)
     val labels = edges.select(col("hi").as("doc_id"), col("lo").as("cluster_id"))
@@ -490,9 +410,7 @@ object Dedup {
 
   /** Near-dup cluster REPRESENTATIVE selection by quality — the keep
     * policy upgrade over min-id: within each connected component
-    * (`clusterFn`, default the diameter-independent [[clustersStar]];
-    * [[clusters]] is the contract-identical propagation form),
-    * keep the member with the highest [[TextAnalysis.qualityScore]]
+    * ([[clusters]]), keep the member with the highest [[TextAnalysis.qualityScore]]
     * (doc-id tiebreak), so dedup keeps the best copy of a duplicated
     * passage rather than the accidentally-lowest id (the policy FineWeb
     * and Dolma use when a cluster spans pages of differing quality).
@@ -510,10 +428,9 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      minJaccard: Double = 0.5,
-      clusterFn: (DataFrame, DataFrame) => DataFrame = clustersStar(_, _)): DataFrame = {
+      minJaccard: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cl = clusterFn(
+    val cl = clusters(
       docs.select(col(idCol).as("doc_id")),
       minhashPairs(docs, idCol, textCol, minJaccard = minJaccard))
     val q = TextAnalysis.qualityScore(docs, idCol, textCol)
@@ -795,7 +712,7 @@ object Dedup {
       estSlack: Double = 0.15): DataFrame = {
     val minAgree = math.ceil((minJaccard - estSlack) * perms).toInt
     // two-stage kept: see lshVerifiedPairs — the fused single-join-pair
-    // form measured ~35% slower intra-session (ProfileAbR21)
+    // form measured ~35% slower intra-session (OPTIMIZATION_r21.md)
     val screened = cand
       .join(shNew.select(col("new_id"), col("sig").as("sig_a")), Seq("new_id"))
       .join(shHist.select(col("hist_id"), col("sig").as("sig_b")), Seq("hist_id"))

@@ -136,7 +136,7 @@ object CorpusStream {
     // (1) in-batch: near-dup clusters -> keep the minimum id per cluster
     val inBatchPairs = Dedup.minhashPairs(b, "doc_id", "text",
       shingleK, perms, nBands, rowsPerBand, minJaccard)
-    val reps = Dedup.clustersStar(b.select(col("doc_id")), inBatchPairs)
+    val reps = Dedup.clusters(b.select(col("doc_id")), inBatchPairs)
       .filter(col("cluster_id") === col("doc_id"))
       .select(col("doc_id"))
     val repDocs = b.join(reps, Seq("doc_id"), "left_semi")
@@ -387,7 +387,7 @@ object CorpusStream {
     // (1) in-batch clustering — identical to nearDupGateBatch
     val inBatchPairs = Dedup.minhashPairs(b, "doc_id", "text",
       shingleK, perms, nBands, rowsPerBand, minJaccard)
-    val reps = Dedup.clustersStar(b.select(col("doc_id")), inBatchPairs)
+    val reps = Dedup.clusters(b.select(col("doc_id")), inBatchPairs)
       .filter(col("cluster_id") === col("doc_id"))
       .select(col("doc_id"))
     val repDocs = b.join(reps, Seq("doc_id"), "left_semi")
@@ -1066,7 +1066,7 @@ object CorpusStream {
       .select("doc_id", "contaminated")
 
     // gate 7: in-drop clusters, representatives vs bucketed history
-    val clusters = Dedup.clustersStar(b.select(col("doc_id")),
+    val clusters = Dedup.clusters(b.select(col("doc_id")),
       Dedup.minhashPairs(b.select(col("doc_id"), col("text")), "doc_id", "text",
         shingleK, perms, nBands, rowsPerBand, minJaccard))
       .localCheckpoint() // feeds rep selection + verdict join

@@ -1,0 +1,36 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Lint guard: [[LocalSession]] is the only place in `src/main` that
+  * builds a SparkSession, so the mains cannot drift apart again (each
+  * hand-copied builder block used to carry its own core count, log level
+  * and subset of the production settings). */
+class SessionSetupLintSpec extends AnyFunSuite {
+
+  private val Builder = """SparkSession\s*\.\s*builder\b""".r
+
+  test("only LocalSession.scala builds a SparkSession in src/main/scala") {
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val walk = Files.walk(root)
+    val counts: Map[Path, Int] =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .map(p => p -> Builder.findAllMatchIn(
+          new String(Files.readAllBytes(p), StandardCharsets.UTF_8)).size)
+        .filter(_._2 > 0)
+        .toMap
+      finally walk.close()
+    val offenders = counts.keys.filter(_.getFileName.toString != "LocalSession.scala")
+    assert(offenders.isEmpty,
+      s"SparkSession.builder() outside LocalSession.scala — call graft.LocalSession() " +
+        s"instead: ${offenders.toSeq.map(_.toString).sorted.mkString(", ")}")
+    assert(counts.values.sum == 1, s"expected exactly one builder call, got $counts")
+  }
+}

@@ -4,13 +4,12 @@ import scala.util.Random
 
 import graft.SparkSpec
 
-/** Property fuzz for the [[Dedup.clusters]] / [[Dedup.clustersStar]]
-  * equivalence the round-20 production switch rides on: random
-  * undirected pair graphs (self-loops, duplicate and reversed edges,
-  * edges to nodes outside the doc universe, chains grafted onto
-  * cliques) must produce IDENTICAL (doc_id, cluster_id) labelings from
-  * both forms, and both must equal a naive in-memory union-find —
-  * min reachable id per component, singletons self-clustered. */
+/** Property fuzz for [[Dedup.clusters]]: random undirected pair graphs
+  * (self-loops, duplicate and reversed edges, edges to nodes outside the
+  * doc universe, chains grafted onto cliques) must produce the
+  * (doc_id, cluster_id) labeling of a naive in-memory union-find — min
+  * reachable id per component, singletons self-clustered — on both the
+  * small-graph driver path and the distributed star-contraction loop. */
 class ClustersPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,7 +30,7 @@ class ClustersPropertySpec extends SparkSpec {
     docs.map(d => d -> minOf(find(d))).toMap
   }
 
-  test("random pair graphs: star == propagation == union-find, every seed") {
+  test("random pair graphs: driver path == loop == union-find, every seed") {
     for (seed <- Seq(1, 7, 42, 1234, 99999)) {
       val rng = new Random(seed)
       val n = 5 + rng.nextInt(60)
@@ -52,28 +51,20 @@ class ClustersPropertySpec extends SparkSpec {
       }
       val docsDf = docs.toDF("doc_id")
       val pairsDf = pairs.toDF("doc_a", "doc_b")
-      // both code paths of both forms: the default gate takes the r22
-      // small-graph DRIVER path (these graphs are far under the edge
-      // cap); smallGraphMaxEdges = 0 forces the distributed LOOPS, so
-      // the loop implementations keep property coverage.
-      val prop = Dedup.clusters(docsDf, pairsDf)
+      // both code paths: the default gate takes the small-graph DRIVER
+      // path (these graphs are far under the edge cap);
+      // smallGraphMaxEdges = 0 forces the distributed LOOP, so the loop
+      // keeps property coverage.
+      val driver = Dedup.clusters(docsDf, pairsDf)
         .as[(Long, Long)].collect().toMap
-      val star = Dedup.clustersStar(docsDf, pairsDf)
-        .as[(Long, Long)].collect().toMap
-      val propLoop = Dedup.clusters(docsDf, pairsDf, smallGraphMaxEdges = 0)
-        .as[(Long, Long)].collect().toMap
-      val starLoop = Dedup.clustersStar(docsDf, pairsDf, smallGraphMaxEdges = 0)
+      val loop = Dedup.clusters(docsDf, pairsDf, smallGraphMaxEdges = 0)
         .as[(Long, Long)].collect().toMap
       val want = naive(docs, pairs)
-      assert(star == prop, s"seed=$seed: star diverges from propagation")
-      assert(propLoop == prop,
-        s"seed=$seed: propagation loop diverges from driver path")
-      assert(starLoop == star,
-        s"seed=$seed: star loop diverges from driver path")
-      assert(prop == want,
-        s"seed=$seed: spark labeling diverges from union-find\n" +
-          s"only-spark: ${(prop.toSet -- want.toSet).take(5)}\n" +
-          s"only-naive: ${(want.toSet -- prop.toSet).take(5)}")
+      for ((path, got) <- Seq("driver path" -> driver, "distributed loop" -> loop))
+        assert(got == want,
+          s"seed=$seed: $path labeling diverges from union-find\n" +
+            s"only-spark: ${(got.toSet -- want.toSet).take(5)}\n" +
+            s"only-naive: ${(want.toSet -- got.toSet).take(5)}")
     }
   }
 }

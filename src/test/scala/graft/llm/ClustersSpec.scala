@@ -17,30 +17,34 @@ class ClustersSpec extends SparkSpec {
     val n = 12L
     val docs = (1L to n).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    // force the distributed loop (the default gate would take the r22
+    // force the distributed loop (the default gate would take the
     // small-graph driver path) — this test pins the LOOP's convergence
     val got = Dedup.clusters(docs, pairs, smallGraphMaxEdges = 0)
       .as[(Long, Long)].collect().toMap
     assert(got.values.toSet == Set(1L))
   }
 
-  test("clustersStar matches the propagation form on mixed components") {
+  test("clusters labels mixed components with their min ids on both paths") {
     val docs = Seq(1L, 2L, 3L, 4L, 5L, 9L, 30L, 31L, 32L, 33L).toDF("doc_id")
     // a chain, a pair, a singleton, and a clique with redundant edges
     val pairs = Seq((2L, 3L), (1L, 2L), (4L, 5L),
       (30L, 31L), (31L, 32L), (30L, 32L), (33L, 30L), (33L, 32L))
       .toDF("doc_a", "doc_b")
-    val prop = Dedup.clusters(docs, pairs).as[(Long, Long)].collect().toMap
-    val star = Dedup.clustersStar(docs, pairs).as[(Long, Long)].collect().toMap
-    assert(star == prop)
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L,
+      30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L)
+    val driver = Dedup.clusters(docs, pairs).as[(Long, Long)].collect().toMap
+    val loop = Dedup.clusters(docs, pairs, smallGraphMaxEdges = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(driver == want)
+    assert(loop == want)
   }
 
   test("clustersStar handles self-pairs, duplicate edges and empty graphs") {
     val docs = Seq(1L, 2L, 7L).toDF("doc_id")
     val pairs = Seq((1L, 1L), (2L, 1L), (1L, 2L), (2L, 2L)).toDF("doc_a", "doc_b")
-    val got = Dedup.clustersStar(docs, pairs).as[(Long, Long)].collect().toMap
+    val got = Dedup.clusters(docs, pairs).as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 7L -> 7L))
-    val none = Dedup.clustersStar(docs,
+    val none = Dedup.clusters(docs,
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).as[(Long, Long)].collect().toMap
     assert(none == Map(1L -> 1L, 2L -> 2L, 7L -> 7L))
   }
@@ -48,16 +52,28 @@ class ClustersSpec extends SparkSpec {
   test("clustersStar converges on a planted 1000-node chain within O(log^2 n) rounds") {
     // diameter 999: min-label propagation would need ~999 rounds; star
     // contraction must finish far inside its default 50-round budget —
-    // the 100 TB pathological-component guard this variant exists for
+    // the 100 TB pathological-component guard
     val n = 1000L
     val docs = (1L to n).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     // smallGraphMaxEdges = 0 forces the star LOOP — the round-count
     // bound is exactly what this test exists to pin
-    val got = Dedup.clustersStar(docs, pairs, maxRounds = 25,
+    val got = Dedup.clusters(docs, pairs, maxRounds = 25,
       smallGraphMaxEdges = 0).as[(Long, Long)]
       .collect().toMap
     assert(got.size == n && got.values.toSet == Set(1L))
+  }
+
+  test("clusters fails loudly, naming the cap, when the loop hits maxRounds") {
+    // the same 1000-node chain cannot contract to stars in one round: the
+    // loop must refuse to return its unconverged labels
+    val n = 1000L
+    val docs = (1L to n).toDF("doc_id")
+    val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.clusters(docs, pairs, maxRounds = 1, smallGraphMaxEdges = 0).collect()
+    }
+    assert(e.getMessage.contains("maxRounds = 1"), e.getMessage)
   }
 
   test("clusterRepresentatives keeps the highest-quality member, not the min id") {

@@ -86,42 +86,12 @@ class CurateV2Spec extends SparkSpec {
     assert(v.filter(col("keep") =!= (col("reason") === "kept")).count() == 0)
   }
 
-  test("curateV2 and curateV3 verdicts are identical under propagation and star clustering") {
-    // the r19→r20 production switch: Curation now clusters with the
-    // diameter-independent star form by default — the min-id contract
-    // says the verdicts cannot move, so pin BOTH end-to-end recipes
-    // under both forms on the real corpus
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val accept = Set("en", "de", "fr")
-    def v2(fn: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame) =
-      Curation.curateV2(docs, "doc_id", "text", "lang", accept, clusterFn = fn)
-        .as[(Long, Boolean, String)].collect().toSet
-    val v2Star = v2(Dedup.clustersStar(_, _))
-    val v2Prop = v2(Dedup.clusters(_, _))
-    assert(v2Star == v2Prop,
-      s"curateV2 diverges across cluster forms: only-star=${(v2Star -- v2Prop).take(5)} " +
-        s"only-prop=${(v2Prop -- v2Star).take(5)}")
-    val withUrl = docs.withColumn("url",
-      org.apache.spark.sql.functions.concat(
-        org.apache.spark.sql.functions.lit("https://"), col("source"),
-        org.apache.spark.sql.functions.lit(".example.org/"), col("doc_id")))
-    val bench = withUrl.orderBy("doc_id").limit(3)
-    def v3(fn: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame) =
-      Curation.curateV3(withUrl, "doc_id", "text", "lang", "url", bench, accept,
-        clusterFn = fn).as[(Long, Boolean, String)].collect().toSet
-    val v3Star = v3(Dedup.clustersStar(_, _))
-    val v3Prop = v3(Dedup.clusters(_, _))
-    assert(v3Star == v3Prop,
-      s"curateV3 diverges across cluster forms: only-star=${(v3Star -- v3Prop).take(5)} " +
-        s"only-prop=${(v3Prop -- v3Star).take(5)}")
-  }
-
   test("a chain-shaped pair graph collapses identically through a curation gate") {
     // sliding-window texts: each doc shares a 16-of-20-word block with its
     // neighbor (shingle J ≈ 0.6 > 0.5) but only 12 with distance-2
     // (J ≈ 0.38 < 0.5) — the pair graph is a 9-hop CHAIN, the semi-dup
-    // ladder where min-label propagation needs diameter rounds and the
-    // production star form must converge in O(log² n)
+    // ladder where min-label propagation would need diameter rounds and
+    // star contraction converges in O(log² n)
     val words = (0 until 60).map(i => f"tok$i%02d")
     val chainDocs = (0 until 10).map { i =>
       (i + 1L, words.slice(4 * i, 4 * i + 20).mkString(" "))
@@ -130,16 +100,12 @@ class CurateV2Spec extends SparkSpec {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(edges == (1L until 10L).map(i => (i, i + 1)).toSet,
       s"fixture drift: expected a pure consecutive chain, got $edges")
-    def gate(fn: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame) =
-      Curation.curate(chainDocs, "doc_id", "text", minQuality = 0.0, clusterFn = fn)
-        .as[(Long, Double, Long, Boolean, String)].collect()
-        .map(r => r._1 -> (r._3, r._4, r._5)).toMap
-    val star = gate(Dedup.clustersStar(_, _))
-    val prop = gate(Dedup.clusters(_, _))
-    assert(star == prop, s"gate verdicts diverge on the chain: star=$star prop=$prop")
-    assert(star.values.map(_._1).toSet == Set(1L), "chain must collapse to one cluster")
-    assert(star(1L) == ((1L, true, "kept")))
-    assert((2L to 10L).forall(i => star(i) == ((1L, false, "near_duplicate"))))
+    val got = Curation.curate(chainDocs, "doc_id", "text", minQuality = 0.0)
+      .as[(Long, Double, Long, Boolean, String)].collect()
+      .map(r => r._1 -> (r._3, r._4, r._5)).toMap
+    assert(got.values.map(_._1).toSet == Set(1L), "chain must collapse to one cluster")
+    assert(got(1L) == ((1L, true, "kept")))
+    assert((2L to 10L).forall(i => got(i) == ((1L, false, "near_duplicate"))))
   }
 
   test("curateV2With(drop, artifacts) ≡ curateV2(corpus) restricted to the drop") {

@@ -469,8 +469,10 @@ def fuzz_main(out: str, seed: int, n_msgs: int = 6):
 
 
 def big_main(out: str):
-    """CC_BIG mode (NOT committed; feeds graft.ProfileScan for the CCSDS
-    decode-rate pin): an ensemble-day-shaped file — members x steps
+    """CC_BIG mode (NOT committed; input for the CCSDS decode-rate pin,
+    timed as a sum(value) over
+    spark.read.format("graft.sources.GribSource").option("path", <file>).load()
+    — BASELINE.md records the rates): an ensemble-day-shaped file — members x steps
     messages on a large grid, bounded-random-walk fields (small deltas,
     the meteorological shape -> mostly k-split blocks with zero runs and
     the occasional uncompressed block). Python-loop encoding is slow;

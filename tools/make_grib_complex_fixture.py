@@ -23,8 +23,10 @@ exact float32 widening, 2^E and 10^D exact for the chosen E/D).
 Run once, commit outputs:
   python3 tools/make_grib_complex_fixture.py
 
-Big mode (NOT committed; feeds graft.ProfileScan for the complex-packing
-decode-rate pin): an E1-shaped ensemble day — 51 members x 6 steps on a
+Big mode (NOT committed; input for the complex-packing decode-rate pin,
+timed as a sum(value) over
+spark.read.format("graft.sources.GribSource").option("path", <file>).load()
+— BASELINE.md records the rates): an E1-shaped ensemble day — 51 members x 6 steps on a
 920x700 grid (~197 M cells) — complex-packed with the order cycling
 0/1/2 across members. Uses a legal uniform-group-width encoding
 (widthBits=0) so numpy can vectorize the bit packing:

@@ -10,8 +10,8 @@ time(time). 94.6 M cells per variable, recsize ~= 3.1 MB, ~1.1 GB total.
 
 Usage:
   python3 tools/make_netcdf_big_record.py [/tmp/bigrecord.nc]
-then:
-  SPARK_GRAFT_CPUS=32 sbt 'runMain graft.ProfileScan /tmp/bigrecord.nc netcdf'
+then time a scan of it, e.g. a sum over a record variable of
+  spark.read.format("graft.sources.NetcdfSource").option("path", "/tmp/bigrecord.nc").load()
 """
 import struct
 import sys
