@@ -90,6 +90,13 @@ object GateSoak {
           bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
     })
 
+    def readDrop(i: Int) = spark.read.schema(CorpusStream.documentsSchema)
+      .parquet(f"$dropDir/drop_$i%03d.parquet")
+    // 211 synthetic registrable domains spread across the corpus
+    val syntheticUrl = concat(lit("https://www.h"),
+      pmod(col("doc_id"), lit(211L)).cast("string"),
+      lit("site.com/"), col("doc_id").cast("string"))
+
     val t0 = System.nanoTime()
     if (mode == "profile") {
       // Drop-by-drop INCREMENTAL profiling (Profile.state per drop,
@@ -101,8 +108,7 @@ object GateSoak {
       val statePath = s"$work/profile_state"
       var mismatch = false
       for (i <- 0 until nDrops) {
-        val drop = spark.read.schema(CorpusStream.documentsSchema)
-          .parquet(f"$dropDir/drop_$i%03d.parquet")
+        val drop = readDrop(i)
         val b0 = bytesRead.get()
         val tb = System.nanoTime()
         CorpusStream.profileBatch(drop, i.toLong, statePath)
@@ -112,10 +118,7 @@ object GateSoak {
         println(f"  drop $i%2d: ${(bytesRead.get() - b0) / 1024}%6d KB read, " +
           f"${(System.nanoTime() - tb) / 1e9}%.2f s, state_rows=$stateRows")
         if (i == nDrops - 1) {
-          val seen = (0 to i).map(j =>
-            spark.read.schema(CorpusStream.documentsSchema)
-              .parquet(f"$dropDir/drop_$j%03d.parquet"))
-            .reduce(_ unionByName _)
+          val seen = (0 to i).map(readDrop).reduce(_ unionByName _)
           val onePass = Profile.profile(seen).collect().map(_.toString).sorted.toSeq
           mismatch = merged != onePass
           println(s"  final merge == one-pass profile: ${!mismatch}")
@@ -131,21 +134,16 @@ object GateSoak {
       return
     }
     if (mode == "domaincap") {
-      // Drop-by-drop per-domain cap: 211 synthetic registrable domains
-      // spread across the corpus; the cap saturates mid-soak, so later
-      // triggers exercise the full-domain rejection path. Watch the
-      // per-trigger bytes: the bucketed count store + compaction should
-      // keep reads bounded by the drop's domain buckets, not history.
+      // Drop-by-drop per-domain cap over the synthetic domains; the cap
+      // saturates mid-soak, so later triggers exercise the full-domain
+      // rejection path. Watch the per-trigger bytes: the bucketed count
+      // store + compaction should keep reads bounded by the drop's domain
+      // buckets, not history.
       val kept = s"$work/kept"
       val rej = s"$work/rej"
       var keptTotal = 0L
       for (i <- 0 until nDrops) {
-        val drop = spark.read.schema(CorpusStream.documentsSchema)
-          .parquet(f"$dropDir/drop_$i%03d.parquet")
-          .select(col("doc_id"),
-            concat(lit("https://www.h"),
-              pmod(col("doc_id"), lit(211L)).cast("string"),
-              lit("site.com/"), col("doc_id").cast("string")).as("url"))
+        val drop = readDrop(i).select(col("doc_id"), syntheticUrl.as("url"))
         val b0 = bytesRead.get()
         val tb = System.nanoTime()
         CorpusStream.domainCapGateBatch(drop, i.toLong, "url", kept, rej,
@@ -178,12 +176,7 @@ object GateSoak {
       var keptTotal = 0L
       var maxStoreRows = 0L
       for (i <- 0 until nDrops) {
-        val drop = spark.read.schema(CorpusStream.documentsSchema)
-          .parquet(f"$dropDir/drop_$i%03d.parquet")
-          .select(col("doc_id"),
-            concat(lit("https://www.h"),
-              pmod(col("doc_id"), lit(211L)).cast("string"),
-              lit("site.com/"), col("doc_id").cast("string")).as("url"))
+        val drop = readDrop(i).select(col("doc_id"), syntheticUrl.as("url"))
         val b0 = bytesRead.get()
         val tb = System.nanoTime()
         CorpusStream.domainCapGateBatch(drop, i.toLong, "url", kept, rej,
@@ -221,16 +214,14 @@ object GateSoak {
       val exactStore = s"$work/exact_index"
       val sigStore = s"$work/sig_store"
       val verdicts = s"$work/verdicts"
-      val ref = spark.read.schema(CorpusStream.documentsSchema)
-        .parquet(f"$dropDir/drop_000.parquet")
+      val ref = readDrop(0)
       val models = CurationArtifacts.build(ref, "doc_id", "text", "lang")
       // seed history with the reference corpus itself
       models.exactIndex.write.mode("overwrite").parquet(s"$exactStore/batch=0")
       models.signatures.write.mode("overwrite").parquet(s"$sigStore/batch=0")
       var keptTotal = ref.count()
       for (i <- 1 until nDrops) {
-        val drop = spark.read.schema(CorpusStream.documentsSchema)
-          .parquet(f"$dropDir/drop_$i%03d.parquet")
+        val drop = readDrop(i)
         val b0 = bytesRead.get()
         val tb = System.nanoTime()
         val artifacts = models.copy(
@@ -267,8 +258,7 @@ object GateSoak {
       // trigger's store reads must be bounded by the DROP's touched
       // buckets, not the stream's lifetime.
       import graft.llm.CurationArtifacts
-      val ref = spark.read.schema(CorpusStream.documentsSchema)
-        .parquet(f"$dropDir/drop_000.parquet")
+      val ref = readDrop(0)
       val models = CurationArtifacts.build(ref, "doc_id", "text", "lang")
       models.nbTokenModel.cache().count()
       models.nbPriors.cache().count()
@@ -278,12 +268,7 @@ object GateSoak {
         .select("text").cache()
       var keptTotal = 0L
       for (i <- 0 until nDrops) {
-        val drop = spark.read.schema(CorpusStream.documentsSchema)
-          .parquet(f"$dropDir/drop_$i%03d.parquet")
-          .withColumn("url",
-            concat(lit("https://www.h"),
-              pmod(col("doc_id"), lit(211L)).cast("string"),
-              lit("site.com/"), col("doc_id").cast("string")))
+        val drop = readDrop(i).withColumn("url", syntheticUrl)
         val b0 = bytesRead.get()
         val tb = System.nanoTime()
         CorpusStream.curateV3GateBatch(drop, i.toLong, "url",
@@ -320,8 +305,7 @@ object GateSoak {
       // so each trigger's bytes are attributable
       val postings = s"$work/postings"
       for (i <- 0 until nDrops) {
-        val drop = spark.read.schema(CorpusStream.documentsSchema)
-          .parquet(f"$dropDir/drop_$i%03d.parquet")
+        val drop = readDrop(i)
         val b0 = bytesRead.get()
         val tb = System.nanoTime()
         CorpusStream.nearDupGateBucketedBatch(drop, i.toLong, corpus, postings, store)
@@ -330,8 +314,7 @@ object GateSoak {
       }
     } else {
       for (i <- 0 until nDrops) {
-        val drop = spark.read.schema(CorpusStream.documentsSchema)
-          .parquet(f"$dropDir/drop_$i%03d.parquet")
+        val drop = readDrop(i)
         val b0 = bytesRead.get()
         val tb = System.nanoTime()
         CorpusStream.nearDupGateBatch(drop, i.toLong, corpus, store,
@@ -367,9 +350,7 @@ object GateSoak {
               .otherwise(concat_ws(" ",
                 transform(sequence(lit(1), lit(40)),
                   i => concat(lit("w"), (col("doc_id") * 100 + i).cast("string"))))))
-        val shProbe = Dedup.signatureTable(probe, "doc_id", "text")
-          .withColumnRenamed("doc_id", "new_id").localCheckpoint()
-        val bProbe = Dedup.bandPostings(shProbe, "new_id", 16, 4).localCheckpoint()
+        val shProbe = Dedup.signatureTable(probe, "doc_id", "text").localCheckpoint()
         def measure(label: String)(job: => Long): Unit = {
           val b0 = bytesRead.get()
           val t1 = System.nanoTime()
@@ -381,35 +362,15 @@ object GateSoak {
         measure("single-store") {
           val hist = spark.read.parquet(merged)
             .select(col("doc_id").as("hist_id"), col("hs"), col("sig"))
-          Dedup.minhashIncrementalPairsFromSignatures(shProbe, hist)
+          Dedup.minhashIncrementalPairsFromSignatures(
+            shProbe.withColumnRenamed("doc_id", "new_id"), hist)
             .select("new_id").distinct().count()
         }
         measure("bucketed") {
-          val touched = bProbe
-            .select(pmod(hash(col("band"), col("band_hash")), lit(64)).as("bk"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          val postHist = spark.read.parquet(postings)
-            .filter(col(CorpusStream.PostingsBucketCol).isin(touched: _*))
-            .select(col("hist_id"), col("band"), col("band_hash"))
-          val okKeys = bProbe.select(col("band"), col("band_hash"))
-            .unionByName(postHist.select(col("band"), col("band_hash")))
-            .groupBy(col("band"), col("band_hash"))
-            .agg(count(lit(1)).as("n")).filter(col("n") <= Dedup.MaxBucket)
-            .select(col("band"), col("band_hash"))
-          val cand = bProbe.join(okKeys, Seq("band", "band_hash"), "left_semi")
-            .join(postHist, Seq("band", "band_hash"))
-            .select(col("new_id"), col("hist_id")).distinct().localCheckpoint()
-          val candBuckets = cand
-            .select(pmod(hash(col("hist_id")), lit(64)).as("sb"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          if (candBuckets.isEmpty) 0L
-          else {
-            val shHist = spark.read.parquet(store)
-              .filter(col(CorpusStream.SigBucketCol).isin(candBuckets: _*))
-              .select(col("doc_id").as("hist_id"), col("hs"), col("sig"))
-            Dedup.minhashVerifyCandidates(cand, shProbe, shHist, 64, 0.5)
-              .select("new_id").distinct().count()
-          }
+          // the production lookup, under a batch id the store never held
+          CorpusStream.bucketedHistDupIds(spark, shProbe, nDrops.toLong, postings,
+            store, nBands = 16, rowsPerBand = 4, minJaccard = 0.5,
+            postingsBuckets = 64, sigBuckets = 64).count()
         }
       }
     }

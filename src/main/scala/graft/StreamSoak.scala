@@ -20,8 +20,14 @@ import graft.streaming.ForecastStream
   *    must drain exactly the remaining files, with replayed batch ids
   *    deduplicated by the accumulator (foreachBatch is at-least-once);
   *  - FILE LOG: after the drain, the compacted seen-file log under the
-  *    checkpoint must hold one snapshot + at most `compactInterval`
-  *    deltas, and its byte size is printed (steady-state boundedness).
+  *    checkpoint must hold at most its latest snapshot plus
+  *    `compactInterval` deltas, beyond the one earlier generation the log
+  *    retains for replay (steady-state boundedness); its byte size is
+  *    printed.
+  *
+  * It exits 1 unless the drained rows equal one batch read of the same
+  * glob (value sum within relative 1e-9), every batch id from 0 to the
+  * last landed in the accumulator, and the file log is within that bound.
   *
   * Usage (glob quoting: the drop glob is `&lt;dir&gt;/&#42;.grib2`):
   *   sbt 'runMain graft.StreamSoak "/tmp/glofas_week/&#42;.grib2"
@@ -30,6 +36,8 @@ import graft.streaming.ForecastStream
   *       [stopAfterBatches=10] [indexCacheDir]
   */
 object StreamSoak {
+
+  private val FileLogCompactInterval = 10
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
@@ -47,7 +55,7 @@ object StreamSoak {
     val perBatch = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Double)]()
 
     def runPhase(label: String, stopAfterBatches: Option[Int]): (Double, Int) = {
-      val opts = Map("fileLogCompactInterval" -> "10") ++
+      val opts = Map("fileLogCompactInterval" -> FileLogCompactInterval.toString) ++
         idxCache.map("indexCacheDir" -> _)
       val stream = ForecastStream.readGrib(spark, glob,
         numPartitions = LocalSession.cpus, maxFilesPerTrigger = maxFiles,
@@ -85,16 +93,42 @@ object StreamSoak {
     val valueSum = perBatch.values().asScala.map(_._2).sum
     println(f"total: ${perBatch.size()} batches, $rows%,d rows, value sum $valueSum%.2f")
 
-    // compacted seen-file log: bounded = one snapshot + <= interval deltas
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    def check(ok: Boolean, failure: => String): Unit = if (!ok) failures += failure
+    // the drain must see every file once: one batch read of the same glob
+    val batch = spark.read.format(classOf[graft.sources.GribSource].getName)
+      .options(idxCache.map("indexCacheDir" -> _).toMap)
+      .option("path", glob).option("numPartitions", LocalSession.cpus.toString).load()
+      .agg(count(lit(1)), coalesce(sum(col("value")), lit(0.0))).collect()(0)
+    val (batchRows, batchSum) = (batch.getLong(0), batch.getDouble(1))
+    println(f"batch read: $batchRows%,d rows, value sum $batchSum%.2f")
+    check(rows == batchRows, s"streamed $rows rows, the batch read $batchRows")
+    check(math.abs(valueSum - batchSum) <= 1e-9 * math.max(math.abs(batchSum), 1.0),
+      s"streamed value sum $valueSum, the batch read $batchSum")
+    val ids = perBatch.keySet().asScala.toSet
+    val missing = (0L to ids.maxOption.getOrElse(-1L)).filterNot(ids)
+    check(ids.nonEmpty && missing.isEmpty, s"batch ids missing: ${missing.mkString(", ")}")
+
+    // compacted seen-file log: the latest snapshot, at most `interval`
+    // deltas after it, and one earlier generation retained for replay
     val logDir = Paths.get(ckpt, "sources", "0", "filelog")
     if (Files.isDirectory(logDir)) {
       val files = Files.list(logDir).iterator().asScala.toSeq
         .filterNot(_.getFileName.toString.startsWith("."))
-      val compacts = files.count(_.getFileName.toString.endsWith(".compact"))
-      val bytes = files.map(f => Files.size(f)).sum
-      println(s"file log: ${files.size} files ($compacts snapshots), $bytes bytes")
-    } else println(s"file log dir missing at $logDir")
+      val logIds = files.map(_.getFileName.toString)
+        .flatMap(n => n.stripSuffix(".compact").toLongOption.map(_ -> n.endsWith(".compact")))
+      val latest = logIds.filter(_._2).map(_._1).maxOption.getOrElse(-1L)
+      println(s"file log: ${logIds.size} files (${logIds.count(_._2)} snapshots), " +
+        s"${files.map(f => Files.size(f)).sum} bytes")
+      check(logIds.forall(_._1 >= latest - FileLogCompactInterval),
+        s"file log keeps entries older than one generation before snapshot $latest")
+      check(logIds.count { case (id, snap) => !snap && id > latest } <= FileLogCompactInterval,
+        s"file log holds more than $FileLogCompactInterval deltas after snapshot $latest")
+    } else check(ok = false, s"file log dir missing at $logDir")
     println(s"driver peak RSS ${ScaleSmoke.peakRssMb()} MB")
     spark.stop()
+    failures.foreach(f => System.err.println(s"STREAM SOAK FAILED: $f"))
+    if (failures.nonEmpty) sys.exit(1)
+    println("STREAM SOAK OK")
   }
 }

@@ -17,6 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object Contamination {
 
+  /** The boolean verdict column of [[overlap]] and [[semantic]]. */
+  private[graft] val Flag = "contaminated"
+
   /** Corpus-level n-gram Jaccard between two corpora via KMV sketches —
     * the cheap "how much does drop B overlap corpus A" signal run before
     * the per-document passes (L19/L58): each side's distinct word-n-gram
@@ -116,7 +119,7 @@ object Contamination {
           .as("contamination_ratio"),
         (when(coalesce(col("n_grams"), lit(0L)) === 0, lit(0.0))
           .otherwise(coalesce(col("n_matched"), lit(0L)).cast("double") / col("n_grams"))
-          >= maxRatio).as("contaminated"))
+          >= maxRatio).as(Flag))
   }
 
   /** Contaminated-span REMOVAL — the apply side of [[overlap]]: instead
@@ -212,6 +215,6 @@ object Contamination {
         col("vec_id"),
         coalesce(col("n_bench_hits"), lit(0L)).as("n_bench_hits"),
         coalesce(col("max_cosine"), lit(0.0)).as("max_cosine"),
-        col("n_bench_hits").isNotNull.as("contaminated"))
+        col("n_bench_hits").isNotNull.as(Flag))
   }
 }

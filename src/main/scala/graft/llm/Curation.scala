@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted inputs of the PRODUCTION five-gate verdict
@@ -40,16 +41,8 @@ object CurationArtifacts {
       perms: Int = 64): CurationArtifacts = {
     val d = corpus.select(col(idCol).as("doc_id"), col(textCol).as("text"),
       col(labelCol).cast("string").as("__label"))
-    // one corpus unigram pass feeds both LM tables (lmBigrams would
-    // otherwise re-train its own copy — guide §2.3: never recompute a
-    // corpus pass to rebuild a dimension-sized frame); the table is a
-    // local relation since r22, so no checkpoint is needed to share it
-    val uni = LangModel.lmUnigrams(d, "doc_id", "text", vocabSize)
-    CurationArtifacts(
-      nbTokenModel = Classify.nbTrain(d, "doc_id", "text", "__label", vocabSize),
-      nbPriors = Classify.nbPriors(d, "__label"),
-      lmUnigrams = uni,
-      lmBigrams = LangModel.lmBigramsWith(d, "text", uni),
+    val (nbTokenModel, nbPriors, lmUnigrams, lmBigrams) = Curation.trainModels(d, vocabSize)
+    CurationArtifacts(nbTokenModel, nbPriors, lmUnigrams, lmBigrams,
       exactIndex = d.groupBy(md5(col("text")).as("text_md5"))
         .agg(min(col("doc_id")).as("keep_id")),
       signatures = Dedup.signatureTable(d, "doc_id", "text", shingleK, perms))
@@ -72,18 +65,138 @@ object CurationArtifacts {
   */
 object Curation {
 
+  /** A curation gate: the `reason` it names and the predicate under which
+    * a document FAILS it, over the doc-keyed frame's gate-input columns. */
+  private[graft] final case class Gate(reason: String, fails: Column)
+
+  /** The reason of a document that fails no gate. */
+  private[graft] val Kept = "kept"
+
+  // THE gate list, in verdict order (first failing gate wins): every
+  // verdict here and in graft.streaming.CorpusStream is built from it.
+
+  /** Not the minimum id of its md5 digest (`keep_id`, [[exactKeep]]). */
+  private[graft] val exactDup = Gate("exact_dup", col("doc_id") =!= col("keep_id"))
+
+  /** Not admitted under its domain's cap (`in_cap` null). */
+  private[graft] val domainCapped = Gate("domain_capped", col("in_cap").isNull)
+
+  private[graft] def lowQuality(minQuality: Double): Gate =
+    Gate("low_quality", col("quality_score") < minQuality)
+
+  private[graft] def offLabel(acceptLabels: Set[String]): Gate =
+    Gate("off_label", !col("predicted_label").isin(acceptLabels.toSeq: _*))
+
+  /** Average bigram log-prob below the floor, in integer form. */
+  private[graft] def lowLp(minAvgLpMicros: Long): Gate =
+    Gate("low_lp", col("lp_micros") < lit(minAvgLpMicros) * col("n_pairs"))
+
+  /** The reason is the overlap check's own flag name. */
+  private[graft] val contaminated = Gate(Contamination.Flag, col(Contamination.Flag))
+
+  /** Not its cluster's representative (a null `cluster_id`, a doc never
+    * clustered, counts as one: the [[curate]] oracle's `ELSE`). `vsHistory`
+    * adds `rep_hist_dup`: the representative matched history. */
+  private[graft] def nearDuplicate(vsHistory: Boolean): Gate = {
+    val notRep = !(col("doc_id") <=> col("cluster_id"))
+    Gate("near_duplicate",
+      if (vsHistory) notRep || coalesce(col("rep_hist_dup"), lit(false)) else notRep)
+  }
+
+  /** The seven-gate order of [[curateV3]] and the streaming gate. */
+  private[graft] def sevenGates(minQuality: Double, acceptLabels: Set[String],
+      minAvgLpMicros: Long, vsHistory: Boolean): Seq[Gate] =
+    Seq(exactDup, domainCapped, lowQuality(minQuality), offLabel(acceptLabels),
+      lowLp(minAvgLpMicros), contaminated, nearDuplicate(vsHistory))
+
+  /** The five-gate order of [[curateV2]]: the seven less the crawl gates. */
+  private def fiveGates(minQuality: Double, acceptLabels: Set[String],
+      minAvgLpMicros: Long, vsHistory: Boolean): Seq[Gate] =
+    Seq(exactDup, lowQuality(minQuality), offLabel(acceptLabels),
+      lowLp(minAvgLpMicros), nearDuplicate(vsHistory))
+
+  /** The name of the first gate in `gates` that fails, else [[Kept]]. */
+  private def reasonOf(gates: Seq[Gate]): Column = {
+    require(gates.nonEmpty, "a verdict needs at least one gate")
+    gates.tail.foldLeft(when(gates.head.fails, lit(gates.head.reason))) {
+      (chain, g) => chain.when(g.fails, lit(g.reason))
+    }.otherwise(lit(Kept))
+  }
+
+  private def keepOf(reason: Column): Column = (reason === Kept).as("keep")
+
+  /** THE verdict builder: a doc-keyed frame with every gate's inputs →
+    * `(doc_id, keep, reason)`, the chain projected once, `keep` from it. */
+  private[graft] def verdict(gated: DataFrame, gates: Seq[Gate]): DataFrame =
+    gated.select(col("doc_id"), reasonOf(gates).as("reason"))
+      .select(col("doc_id"), keepOf(col("reason")), col("reason"))
+
+  /** `docs` as `(doc_id, text, extra*)`, once the INPUT CONTRACT holds:
+    * the gate subtrees re-scan `docs` and join back on doc_id, so rows
+    * that change between scans would drop or mislabel documents. */
+  private def contractInput(docs: DataFrame, caller: String, idCol: String,
+      textCol: String, extra: Column*): DataFrame = {
+    if (!docs.queryExecution.analyzed.deterministic)
+      throw new IllegalArgumentException(s"$caller input contract: docs must be " +
+        "deterministic (its plan is not), because every gate re-scans it; " +
+        "materialize a non-deterministic upstream first")
+    docs.select((col(idCol).as("doc_id") +: col(textCol).as("text") +: extra): _*)
+  }
+
+  /** The four model tables of [[scored]], trained on `d` (doc_id, text,
+    * __label); one unigram pass feeds both LM tables. */
+  private[llm] def trainModels(d: DataFrame, vocabSize: Int = 64)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val uni = LangModel.lmUnigrams(d, "doc_id", "text", vocabSize)
+    (Classify.nbTrain(d, "doc_id", "text", "__label", vocabSize),
+      Classify.nbPriors(d, "__label"), uni, LangModel.lmBigramsWith(d, "text", uni))
+  }
+
+  /** The quality, NB and LM gate inputs as COLUMNS of one pass over `d`
+    * (doc_id, text): pure per-row scorers chained through passThrough, not
+    * three frames joined back on doc_id (an exchange and a re-scan each). */
+  private[graft] def scored(d: DataFrame, nbTokenModel: DataFrame, nbPriors: DataFrame,
+      lmUnigrams: DataFrame, lmBigrams: DataFrame): DataFrame =
+    LangModel.lmScoreWith(
+      TextAnalysis.qualityScore(
+        Classify.nbScoreWith(d, "doc_id", "text", nbTokenModel, nbPriors,
+          passThrough = Seq("text")),
+        "doc_id", "text", passThrough = Seq("text", "predicted_label")),
+      "doc_id", "text", lmUnigrams, lmBigrams,
+      passThrough = Seq("quality_score", "predicted_label"))
+
+  /** [[scored]] against models self-trained on `d`. */
+  private def selfScored(d: DataFrame): DataFrame = {
+    val (nb, priors, uni, bi) = trainModels(d)
+    scored(d, nb, priors, uni, bi)
+  }
+
+  /** `(doc_id, text_md5, drop_min)`: the min id per digest within `d`. The
+    * digest is projected BEFORE the window, so the exchange ships (doc_id,
+    * md5); keyed on md5(text) directly, the full text would cross it. */
+  private[graft] def digestWindow(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), md5(col("text")).as("text_md5"))
+      .withColumn("drop_min", min(col("doc_id")).over(Window.partitionBy(col("text_md5"))))
+
+  /** [[exactDup]]'s `keep_id` against a history index (text_md5, hist_min). */
+  private[graft] def exactKeep(digested: DataFrame, hist: DataFrame): DataFrame =
+    digested.join(hist, Seq("text_md5"), "left")
+      .select(col("doc_id"),
+        least(col("drop_min"), coalesce(col("hist_min"), col("drop_min"))).as("keep_id"))
+
   def curate(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       minQuality: Double = 0.4,
       minJaccard: Double = 0.5): DataFrame = {
+    val d = contractInput(docs, "curate", idCol, textCol)
     // Materialize only (doc_id, quality_score) — two narrow columns —
     // instead of re-running the tokenizing quality scorer for each of its
     // three consumers (gate, cluster universe, final verdict join). The
     // full text is never checkpointed; it is re-scanned exactly once, by
     // the pair-detection input join below.
-    val scores = TextAnalysis.qualityScore(docs, idCol, textCol)
+    val scores = TextAnalysis.qualityScore(d, "doc_id", "text")
       .select("doc_id", "quality_score").localCheckpoint()
     val passingIds = scores.filter(col("quality_score") >= minQuality)
     // The text side of the gate RECOMPUTES the deterministic per-row
@@ -92,44 +205,39 @@ object Curation {
     // the id side outgrows a broadcast (guide §8 — never shuffle the
     // payload to attach a decision a zero-shuffle projection can
     // recompute; same rows bit-for-bit, scorer is pure per-row).
-    val passing = TextAnalysis.qualityScore(docs, idCol, textCol,
-        passThrough = Seq(textCol))
+    val passing = TextAnalysis.qualityScore(d, "doc_id", "text", passThrough = Seq("text"))
       .filter(col("quality_score") >= minQuality)
-      .select(col("doc_id"), col(textCol).as("text"))
+      .select(col("doc_id"), col("text"))
     val pairs = Dedup.minhashPairs(passing, "doc_id", "text", minJaccard = minJaccard)
     val clustered = Dedup.clusters(passingIds.select("doc_id"), pairs)
+    // keep and reason in ONE projection, the shape this verdict's plan
+    // has always had (the chain is two gates), scores and clusters riding
+    // through
+    val reason = reasonOf(Seq(lowQuality(minQuality), nearDuplicate(vsHistory = false)))
     scores
       .join(clustered, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("quality_score"),
-        col("cluster_id"),
-        when(col("quality_score") < minQuality, lit(false))
-          .when(col("doc_id") === col("cluster_id"), lit(true))
-          .otherwise(lit(false)).as("keep"),
-        when(col("quality_score") < minQuality, lit("low_quality"))
-          .when(col("doc_id") === col("cluster_id"), lit("kept"))
-          .otherwise(lit("near_duplicate")).as("reason"))
+      .select(col("doc_id"), col("quality_score"), col("cluster_id"),
+        keepOf(reason), reason.as("reason"))
   }
 
   /** The COMPLETE modern curation recipe (Dolma/FineWeb-shaped), all five
     * gates over one corpus: exact dedup (min-id per md5 group), fixed-rule
     * quality ([[TextAnalysis.qualityScore]]), trained classifier
-    * ([[Classify.nbClassify]], self-trained on `labelCol`), bigram-LM
-    * probability floor ([[LangModel.lmScore]]), and MinHash near-dup
+    * ([[Classify.nbScoreWith]], self-trained on `labelCol`), bigram-LM
+    * probability floor ([[LangModel.lmScoreWith]]), and MinHash near-dup
     * clustering (min-id representative per cluster). Gates evaluate
     * INDEPENDENTLY over the full corpus (models self-train on everything;
     * no gate's outcome changes another's training set — the shape that
     * keeps every signal reusable and the whole verdict exactly
-    * oracle-checkable); the verdict reports the FIRST failing gate in
-    * the order above. Output: (doc_id, keep, reason ∈ {exact_dup,
+    * oracle-checkable); the verdict reports the FIRST failing gate of the
+    * gate list above. Output: (doc_id, keep, reason ∈ {exact_dup,
     * low_quality, off_label, low_lp, near_duplicate, kept}).
     *
     * Scale shape: gates 2–4 are zero-shuffle kernel projections; gate 1
     * is one 32-byte-key window; gate 5 is the bucketed LSH + the
     * diameter-independent star-contraction clustering
-    * ([[Dedup.clusters]]); the verdict joins five doc-keyed relations —
-    * every shuffle is id- or digest-keyed, nothing is all-pairs.
+    * ([[Dedup.clusters]]); the verdict joins doc-keyed relations — every
+    * shuffle is id- or digest-keyed, nothing is all-pairs.
     *
     * Input contract: `docs` must be DETERMINISTIC and stable across
     * re-execution — the same rows with the same ids and texts every time
@@ -137,9 +245,10 @@ object Curation {
     * (scored chain and trainers, exact window, MinHash, cluster universe)
     * re-scan it, and the verdict joins them on doc_id, so an input that
     * changes between scans (a `rand()` filter or sample, a source that
-    * moves under the read) silently drops or mislabels documents. Pass a
-    * pruned table scan, or materialize a non-deterministic upstream
-    * first. */
+    * moves under the read) would silently drop or mislabel documents. A
+    * `docs` whose plan is not deterministic is rejected with an
+    * IllegalArgumentException; pass a pruned table scan, or materialize a
+    * non-deterministic upstream first. */
   def curateV2(
       docs: DataFrame,
       idCol: String,
@@ -151,7 +260,7 @@ object Curation {
       minJaccard: Double = 0.5): DataFrame = {
     require(acceptLabels.nonEmpty, "curateV2 needs at least one accept label")
     // NOT materialized (r22 — reverses r21's corpus-sized localCheckpoint
-    // here): with gates 2–4 inlined into one scoring pass below, only ~4
+    // here): with gates 2–4 inlined into one scoring pass, only ~4
     // subtrees still read d (scored chain + trainers, exact window,
     // MinHash, cluster universe), each pruning to the columns it needs —
     // and the r22 intra-session A/B of checkpoint / serialized-checkpoint
@@ -162,46 +271,17 @@ object Curation {
     // storage (one lost executor kills a localCheckpoint'd job; pruned
     // compressed parquet re-reads recompute) — the r21 verdict's "What's
     // wrong" item, closed on evidence.
-    val d = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+    val d = contractInput(docs, "curateV2", idCol, textCol,
       col(labelCol).cast("string").as("__label"))
-    // gate 1: PROJECT the 32-byte digest before the window so the exchange
-    // partitions on a plain column and ships (doc_id, md5) — a window
-    // partitioned directly on md5(text) re-evaluates the key post-shuffle,
-    // so the full text would cross the exchange (guide §2.3: shuffle
-    // digests, never payloads — the Dedup.exact discipline)
-    val exact = d
-      .select(col("doc_id"), md5(col("text")).as("__md5"))
-      .select(col("doc_id"),
-        min(col("doc_id")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("__md5")))
-          .as("keep_id"))
-    // Gates 2–4 (quality, NB, LM) are PURE per-row projections of d
-    // (kernel scorers over broadcast-collected dimension-sized models),
-    // so they are computed as COLUMNS of one corpus pass via passThrough
-    // chaining instead of three separate frames joined back on doc_id —
-    // guide §2.4 (remove shuffles outright): each join-back shipped a
-    // (doc_id, score) relation through its own exchange + sort and
-    // re-scanned d once more. Training subtrees are untouched (column
-    // pruning strips the foreign kernels from each training scan).
-    val scored = LangModel.lmScore(
-      TextAnalysis.qualityScore(
-        Classify.nbClassify(d, "doc_id", "text", "__label",
-          passThrough = Seq("text")),
-        "doc_id", "text", passThrough = Seq("text", "predicted_label")),
-      "doc_id", "text", passThrough = Seq("quality_score", "predicted_label"))
+    val exact = digestWindow(d).select(col("doc_id"), col("drop_min").as("keep_id"))
+    val scores = selfScored(d)
     val reps = Dedup.clusters(d.select(col("doc_id")),
       Dedup.minhashPairs(d, "doc_id", "text", minJaccard = minJaccard))
-    scored
-      .join(exact, Seq("doc_id"))
-      .join(reps, Seq("doc_id"))
-      .select(col("doc_id"),
-        when(col("doc_id") =!= col("keep_id"), lit("exact_dup"))
-          .when(col("quality_score") < minQuality, lit("low_quality"))
-          .when(!col("predicted_label").isin(acceptLabels.toSeq: _*), lit("off_label"))
-          .when(col("lp_micros") < lit(minAvgLpMicros) * col("n_pairs"), lit("low_lp"))
-          .when(col("doc_id") =!= col("cluster_id"), lit("near_duplicate"))
-          .otherwise(lit("kept")).as("reason"))
-      .select(col("doc_id"), (col("reason") === "kept").as("keep"), col("reason"))
+    verdict(
+      scores
+        .join(exact, Seq("doc_id"))
+        .join(reps, Seq("doc_id")),
+      fiveGates(minQuality, acceptLabels, minAvgLpMicros, vsHistory = false))
   }
 
   /** SEVEN-gate curation verdict — [[curateV2]] extended with the
@@ -210,7 +290,8 @@ object Curation {
     * domainless docs inadmissible) and benchmark decontamination (L19 —
     * eval-overlapping docs never train). Gates evaluate independently
     * over the full corpus (the [[curateV2]] discipline: no gate alters
-    * another's training set); verdict = first failing gate:
+    * another's training set); verdict = first failing gate of the gate
+    * list above:
     *
     *  1. exact_dup, 2. domain_capped, 3. low_quality, 4. off_label,
     *  5. low_lp, 6. contaminated, 7. near_duplicate — else kept.
@@ -222,7 +303,7 @@ object Curation {
     *
     * Input contract: as [[curateV2]] — `docs` must be deterministic and
     * stable across re-execution, because the gate subtrees re-scan it
-    * and join back on doc_id. */
+    * and join back on doc_id; a non-deterministic plan is rejected. */
   def curateV3(
       docs: DataFrame,
       idCol: String,
@@ -238,46 +319,27 @@ object Curation {
       contaminationN: Int = 3,
       maxContamination: Double = 0.2): DataFrame = {
     require(acceptLabels.nonEmpty, "curateV3 needs at least one accept label")
-    // NOT materialized + digest-projected exact gate: see curateV2's
-    // re-scan A/B note (same shape, one more gate pair)
-    val d = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+    // NOT materialized: see curateV2's re-scan A/B note (same shape, one
+    // more gate pair)
+    val d = contractInput(docs, "curateV3", idCol, textCol,
       col(labelCol).cast("string").as("__label"), col(urlCol).as("__url"))
-    val exact = d
-      .select(col("doc_id"), md5(col("text")).as("__md5"))
-      .select(col("doc_id"),
-        min(col("doc_id")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("__md5")))
-          .as("keep_id"))
+    val exact = digestWindow(d).select(col("doc_id"), col("drop_min").as("keep_id"))
     val winners = Mixture.domainCap(
       d.select(col("doc_id"), col("__url")), "doc_id", "__url", perDomain)
       .select(col("doc_id"), lit(true).as("in_cap"))
-    // gates 3–5 inlined as columns of one corpus pass — see curateV2
-    val scored = LangModel.lmScore(
-      TextAnalysis.qualityScore(
-        Classify.nbClassify(d, "doc_id", "text", "__label",
-          passThrough = Seq("text")),
-        "doc_id", "text", passThrough = Seq("text", "predicted_label")),
-      "doc_id", "text", passThrough = Seq("quality_score", "predicted_label"))
+    val scores = selfScored(d)
     val contam = Contamination.overlap(d, benchmark, "doc_id", "text",
       n = contaminationN, maxRatio = maxContamination)
-      .select("doc_id", "contaminated")
+      .select("doc_id", Contamination.Flag)
     val reps = Dedup.clusters(d.select(col("doc_id")),
       Dedup.minhashPairs(d, "doc_id", "text", minJaccard = minJaccard))
-    scored
-      .join(exact, Seq("doc_id"))
-      .join(winners, Seq("doc_id"), "left")
-      .join(contam, Seq("doc_id"))
-      .join(reps, Seq("doc_id"))
-      .select(col("doc_id"),
-        when(col("doc_id") =!= col("keep_id"), lit("exact_dup"))
-          .when(col("in_cap").isNull, lit("domain_capped"))
-          .when(col("quality_score") < minQuality, lit("low_quality"))
-          .when(!col("predicted_label").isin(acceptLabels.toSeq: _*), lit("off_label"))
-          .when(col("lp_micros") < lit(minAvgLpMicros) * col("n_pairs"), lit("low_lp"))
-          .when(col("contaminated"), lit("contaminated"))
-          .when(col("doc_id") =!= col("cluster_id"), lit("near_duplicate"))
-          .otherwise(lit("kept")).as("reason"))
-      .select(col("doc_id"), (col("reason") === "kept").as("keep"), col("reason"))
+    verdict(
+      scores
+        .join(exact, Seq("doc_id"))
+        .join(winners, Seq("doc_id"), "left")
+        .join(contam, Seq("doc_id"))
+        .join(reps, Seq("doc_id")),
+      sevenGates(minQuality, acceptLabels, minAvgLpMicros, vsHistory = false))
   }
 
   /** The PRODUCTION shape of [[curateV2]]: score one corpus DROP against
@@ -335,23 +397,10 @@ object Curation {
     val d = drop.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .localCheckpoint()
     // gate 1: drop-window min combined with the history digest index
-    val exact = d
-      .select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .withColumn("drop_min", min(col("doc_id")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("text_md5"))))
-      .join(broadcast(artifacts.exactIndex
-        .select(col("text_md5"), col("keep_id").as("hist_min"))), Seq("text_md5"), "left")
-      .select(col("doc_id"),
-        least(col("drop_min"), coalesce(col("hist_min"), col("drop_min"))).as("keep_id"))
-    // gates 2–4 inlined as columns of one drop pass — see curateV2
-    val scored = LangModel.lmScoreWith(
-      TextAnalysis.qualityScore(
-        Classify.nbScoreWith(d, "doc_id", "text",
-          artifacts.nbTokenModel, artifacts.nbPriors,
-          passThrough = Seq("text")),
-        "doc_id", "text", passThrough = Seq("text", "predicted_label")),
-      "doc_id", "text", artifacts.lmUnigrams, artifacts.lmBigrams,
-      passThrough = Seq("quality_score", "predicted_label"))
+    val exact = exactKeep(digestWindow(d), broadcast(artifacts.exactIndex
+      .select(col("text_md5"), col("keep_id").as("hist_min"))))
+    val scores = scored(d, artifacts.nbTokenModel, artifacts.nbPriors,
+      artifacts.lmUnigrams, artifacts.lmBigrams)
     // gate 5: in-drop clusters, then representatives vs history
     val clusters = Dedup.clusters(d.select(col("doc_id")),
       Dedup.minhashPairs(d, "doc_id", "text",
@@ -367,18 +416,11 @@ object Curation {
       nBands, rowsPerBand, minJaccard)
       .select(col("new_id").as("cluster_id")).distinct()
       .withColumn("rep_hist_dup", lit(true))
-    scored
-      .join(exact, Seq("doc_id"))
-      .join(clusters, Seq("doc_id"))
-      .join(histDupReps, Seq("cluster_id"), "left")
-      .select(col("doc_id"),
-        when(col("doc_id") =!= col("keep_id"), lit("exact_dup"))
-          .when(col("quality_score") < minQuality, lit("low_quality"))
-          .when(!col("predicted_label").isin(acceptLabels.toSeq: _*), lit("off_label"))
-          .when(col("lp_micros") < lit(minAvgLpMicros) * col("n_pairs"), lit("low_lp"))
-          .when(col("doc_id") =!= col("cluster_id") ||
-            coalesce(col("rep_hist_dup"), lit(false)), lit("near_duplicate"))
-          .otherwise(lit("kept")).as("reason"))
-      .select(col("doc_id"), (col("reason") === "kept").as("keep"), col("reason"))
+    verdict(
+      scores
+        .join(exact, Seq("doc_id"))
+        .join(clusters, Seq("doc_id"))
+        .join(histDupReps, Seq("cluster_id"), "left"),
+      fiveGates(minQuality, acceptLabels, minAvgLpMicros, vsHistory = true))
   }
 }

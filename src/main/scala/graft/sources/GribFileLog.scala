@@ -26,8 +26,9 @@ private[sources] final case class GribFileEntry(
   *    compact generation are deleted.
   *
   * So the engine's offset WAL stays O(1) per entry forever, and this log's
-  * steady-state size is one snapshot + `compactInterval` deltas — a stream
-  * can outlive years of drops. Writes are atomic (temp + rename) and
+  * size stays bounded — the latest snapshot, fewer than `compactInterval`
+  * deltas after it, and the one earlier generation `add` retains for
+  * restart replay — so a stream can outlive years of drops. Writes are atomic (temp + rename) and
   * idempotent (a crash between the log write and the engine's offset WAL
   * write re-runs `latestOffset`, which overwrites the same batch id —
   * safe, because that batch id was never WAL-committed). */

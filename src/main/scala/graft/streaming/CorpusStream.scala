@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.llm.Dedup
+import graft.llm.{Curation, Dedup}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
@@ -46,6 +46,15 @@ object CorpusStream {
       .option("path", pathGlob)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .load()
+
+  /** Every gate sink below: an AvailableNow drain of `docs` under
+    * `checkpointDir`, each micro-batch handed to `batch` with its id. */
+  private def gateSink(docs: DataFrame, checkpointDir: String)(
+      batch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    docs.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(batch)
 
   /** First-seen wins: emits each distinct text's first arriving row. */
   def streamingExactDedup(docs: DataFrame): DataFrame =
@@ -111,13 +120,10 @@ object CorpusStream {
       nBands: Int = 16,
       rowsPerBand: Int = 4,
       minJaccard: Double = 0.5): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDupGateBatch(batch, batchId, corpusPath, storePath,
-          shingleK, perms, nBands, rowsPerBand, minJaccard)
-      }
+    gateSink(docs, checkpointDir) { (batch, batchId) =>
+      nearDupGateBatch(batch, batchId, corpusPath, storePath,
+        shingleK, perms, nBands, rowsPerBand, minJaccard)
+    }
 
   /** One micro-batch of [[nearDupGateSink]], callable directly (the spec
     * drives it batch-by-batch; the sink wires it to foreachBatch). */
@@ -133,15 +139,7 @@ object CorpusStream {
       minJaccard: Double): Unit = {
     val spark = batch.sparkSession
     val b = batch.localCheckpoint() // feeds pairing, clustering, and both sinks
-    // (1) in-batch: near-dup clusters -> keep the minimum id per cluster
-    val inBatchPairs = Dedup.minhashPairs(b, "doc_id", "text",
-      shingleK, perms, nBands, rowsPerBand, minJaccard)
-    val reps = Dedup.clusters(b.select(col("doc_id")), inBatchPairs)
-      .filter(col("cluster_id") === col("doc_id"))
-      .select(col("doc_id"))
-    val repDocs = b.join(reps, Seq("doc_id"), "left_semi")
-    val shBatch = Dedup.signatureTable(repDocs, "doc_id", "text", shingleK, perms)
-      .localCheckpoint()
+    val shBatch = repSignatures(b, shingleK, perms, nBands, rowsPerBand, minJaccard)
     // (2) vs history: signature store of previously KEPT docs, excluding
     // any partial output of a crash-replayed run of THIS batch id
     val fs = new Path(storePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -163,6 +161,18 @@ object CorpusStream {
       .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
     shBatch.join(keptIds, Seq("doc_id"), "left_semi")
       .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+  }
+
+  /** (1) of the near-dup gates: the batch's near-dup clusters collapsed
+    * to their minimum-id representative, as `(doc_id, hs, sig)`. */
+  private def repSignatures(b: DataFrame, shingleK: Int, perms: Int, nBands: Int,
+      rowsPerBand: Int, minJaccard: Double): DataFrame = {
+    val reps = Dedup.clusters(b.select(col("doc_id")), Dedup.minhashPairs(b, "doc_id",
+        "text", shingleK, perms, nBands, rowsPerBand, minJaccard))
+      .filter(col("cluster_id") === col("doc_id"))
+      .select(col("doc_id"))
+    Dedup.signatureTable(b.join(reps, Seq("doc_id"), "left_semi"), "doc_id", "text",
+      shingleK, perms).localCheckpoint()
   }
 
   /** Kept documents of a corpus maintained by [[nearDupGateSink]] (the
@@ -221,14 +231,11 @@ object CorpusStream {
       postingsBuckets: Int = 64,
       sigBuckets: Int = 64,
       compactEvery: Int = 8): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDupGateBucketedBatch(batch, batchId, corpusPath, postingsPath,
-          storePath, shingleK, perms, nBands, rowsPerBand, minJaccard,
-          postingsBuckets, sigBuckets, compactEvery)
-      }
+    gateSink(docs, checkpointDir) { (batch, batchId) =>
+      nearDupGateBucketedBatch(batch, batchId, corpusPath, postingsPath,
+        storePath, shingleK, perms, nBands, rowsPerBand, minJaccard,
+        postingsBuckets, sigBuckets, compactEvery)
+    }
 
   /** Fold finalized per-batch directories of a bucketed store into the
     * `batch=-1` base partition — one file per bucket — so the store's
@@ -377,22 +384,10 @@ object CorpusStream {
       compactEvery: Int = 8,
       ttlBatches: Long = 0): Unit = {
     val spark = batch.sparkSession
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      compactBucketedStore(spark, postingsPath, PostingsBucketCol, batchId,
-        ttlBatches = ttlBatches)
-      compactBucketedStore(spark, storePath, SigBucketCol, batchId,
-        ttlBatches = ttlBatches)
-    }
+    if (compactsAt(batchId, compactEvery))
+      compactNearDupStores(spark, postingsPath, storePath, batchId, ttlBatches)
     val b = batch.localCheckpoint()
-    // (1) in-batch clustering — identical to nearDupGateBatch
-    val inBatchPairs = Dedup.minhashPairs(b, "doc_id", "text",
-      shingleK, perms, nBands, rowsPerBand, minJaccard)
-    val reps = Dedup.clusters(b.select(col("doc_id")), inBatchPairs)
-      .filter(col("cluster_id") === col("doc_id"))
-      .select(col("doc_id"))
-    val repDocs = b.join(reps, Seq("doc_id"), "left_semi")
-    val shBatch = Dedup.signatureTable(repDocs, "doc_id", "text", shingleK, perms)
-      .localCheckpoint()
+    val shBatch = repSignatures(b, shingleK, perms, nBands, rowsPerBand, minJaccard)
     val histDupIds = bucketedHistDupIds(spark, shBatch, batchId,
       postingsPath, storePath, nBands, rowsPerBand, minJaccard,
       postingsBuckets, sigBuckets)
@@ -402,15 +397,44 @@ object CorpusStream {
     // idempotent per-batch landing; one file per touched bucket
     b.join(keptIds, Seq("doc_id"), "left_semi")
       .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-    val keptSh = shBatch.join(keptIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint() // feeds both store writes
-    keptSh
+    landSignatures(shBatch.join(keptIds, Seq("doc_id"), "left_semi"), batchId,
+      storePath, postingsPath, nBands, rowsPerBand, postingsBuckets, sigBuckets)
+  }
+
+  /** Every `compactEvery`-th batch after the first compacts; 0 never. */
+  private def compactsAt(batchId: Long, compactEvery: Int): Boolean =
+    compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
+
+  /** A [[compactBucketedStore]] fold: `agg` per (bucket, key[, origin
+    * under TTL, where age is part of the key]). */
+  private def foldPer(bucketCol: String, key: String, agg: Column,
+      ttlBatches: Long): DataFrame => DataFrame =
+    df => df.groupBy((col(bucketCol) +: col(key) +:
+        (if (ttlBatches > 0) Seq(col("origin_batch")) else Nil)): _*)
+      .agg(agg)
+
+  /** Compacts both (duplicate-tolerant) stores of a bucketed near-dup gate. */
+  private def compactNearDupStores(spark: SparkSession, postingsPath: String,
+      sigStorePath: String, batchId: Long, ttlBatches: Long): Unit = {
+    compactBucketedStore(spark, postingsPath, PostingsBucketCol, batchId,
+      ttlBatches = ttlBatches)
+    compactBucketedStore(spark, sigStorePath, SigBucketCol, batchId,
+      ttlBatches = ttlBatches)
+  }
+
+  /** Lands kept signatures `(doc_id, hs, sig)` as this batch's deltas of
+    * the bucketed signature and postings stores, one file per bucket. */
+  private def landSignatures(sh: DataFrame, batchId: Long, sigStorePath: String,
+      postingsPath: String, nBands: Int, rowsPerBand: Int, postingsBuckets: Int,
+      sigBuckets: Int): Unit = {
+    val kept = sh.localCheckpoint() // feeds both store writes
+    kept
       .withColumn(SigBucketCol, pmod(hash(col("doc_id")), lit(sigBuckets)))
       .repartition(col(SigBucketCol))
       .sortWithinPartitions(col("doc_id")) // tight row-group id stats
       .write.partitionBy(SigBucketCol)
-      .mode("overwrite").parquet(s"$storePath/batch=$batchId")
-    Dedup.bandPostings(keptSh, "doc_id", nBands, rowsPerBand)
+      .mode("overwrite").parquet(s"$sigStorePath/batch=$batchId")
+    Dedup.bandPostings(kept, "doc_id", nBands, rowsPerBand)
       .withColumnRenamed("doc_id", "hist_id")
       .withColumn(PostingsBucketCol,
         pmod(hash(col("band"), col("band_hash")), lit(postingsBuckets)))
@@ -421,6 +445,21 @@ object CorpusStream {
       .mode("overwrite").parquet(s"$postingsPath/batch=$batchId")
   }
 
+  /** A batch's view of a bucketed store: `agg` as `aggName` per `key`,
+    * read from ONLY the buckets `keys` touch (a bounded driver collect)
+    * and never from this batch's own delta (a replay must not see it). */
+  private def priorPerKey(keys: DataFrame, batchId: Long, storePath: String,
+      bucketCol: String, key: String, agg: Column, aggName: String): DataFrame = {
+    val spark = keys.sparkSession
+    val touched = keys.select(bucketCol).distinct().collect().map(_.getInt(0)).toSeq
+    val fs = new Path(storePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(storePath)) || touched.isEmpty)
+      spark.range(0).select(lit("").as(key), lit(0L).as(aggName))
+    else spark.read.parquet(storePath)
+      .filter(col("batch") =!= batchId && col(bucketCol).isin(touched: _*))
+      .groupBy(key).agg(agg.as(aggName))
+  }
+
   /** Batch signatures → ids whose MinHash matches the bucketed history
     * (the pruned-store lookup shared by [[nearDupGateBucketedBatch]] and
     * [[curateV3GateBatch]]): band postings of the batch are joined against
@@ -428,7 +467,7 @@ object CorpusStream {
     * the signature buckets holding candidate hist ids — per-trigger I/O
     * scales with the drop, not the history. Both driver collects are
     * bounded by the bucket counts. */
-  private[streaming] def bucketedHistDupIds(
+  private[graft] def bucketedHistDupIds(
       spark: SparkSession,
       shBatch: DataFrame, // (doc_id, hs, sig)
       batchId: Long,
@@ -519,14 +558,11 @@ object CorpusStream {
       lmBigramModel: DataFrame,
       acceptLabels: Set[String],
       minAvgLpMicros: Long): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreGateBatch(batch, batchId, keptPath, rejectedPath,
-          nbTokenModel, nbPriors, lmUnigramModel, lmBigramModel,
-          acceptLabels, minAvgLpMicros)
-      }
+    gateSink(docs, checkpointDir) { (batch, batchId) =>
+      scoreGateBatch(batch, batchId, keptPath, rejectedPath,
+        nbTokenModel, nbPriors, lmUnigramModel, lmBigramModel,
+        acceptLabels, minAvgLpMicros)
+    }
 
   /** One micro-batch of [[scoreGateSink]], callable directly. */
   def scoreGateBatch(
@@ -612,13 +648,10 @@ object CorpusStream {
       compactEvery: Int = 8,
       suffixCsv: String = graft.functions.GraftUrlOps.DefaultSuffixes,
       ttlBatches: Long = 0): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        domainCapGateBatch(batch, batchId, urlCol, keptPath, rejectedPath,
-          storePath, perDomain, buckets, compactEvery, suffixCsv, ttlBatches)
-      }
+    gateSink(docs, checkpointDir) { (batch, batchId) =>
+      domainCapGateBatch(batch, batchId, urlCol, keptPath, rejectedPath,
+        storePath, perDomain, buckets, compactEvery, suffixCsv, ttlBatches)
+    }
 
   /** One micro-batch of [[domainCapGateSink]], callable directly. */
   def domainCapGateBatch(
@@ -641,35 +674,42 @@ object CorpusStream {
     // deltas live only in the staging dir — which the prior read cannot
     // see. Deciding against the un-recovered store would under-count
     // every domain the lost delta touched and silently overshoot the cap.
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      compactBucketedStore(spark, storePath, DomainBucketCol, batchId,
-        // under TTL the admission batch is part of the aggregation key:
-        // per-(domain, origin) counts age out independently, giving the
-        // sliding-window cap ("perDomain admissions per ttl horizon")
-        fold = df => df.groupBy((col(DomainBucketCol) +: col("domain") +:
-            (if (ttlBatches > 0) Seq(col("origin_batch")) else Nil)): _*)
-          .agg(sum("n_admitted").as("n_admitted")),
-        ttlBatches = ttlBatches)
-    val fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (compactsAt(batchId, compactEvery))
+      compactDomainStore(spark, storePath, batchId, ttlBatches)
     val dataCols = batch.columns.toSeq
+    val (tagged, decided) = admitDomains(batch, batchId, urlCol, storePath,
+      perDomain, buckets, suffixCsv)
+    val outCols = (dataCols :+ "domain").map(col)
+    decided.filter(col("admit")).select(outCols: _*)
+      .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
+    decided.filter(!col("admit")).select(outCols: _*)
+      .unionByName(tagged.filter(col("domain").isNull).select(outCols: _*))
+      .write.mode("overwrite").parquet(s"$rejectedPath/batch=$batchId")
+    landAdmitted(decided, batchId, storePath)
+  }
+
+  /** Compacts a domain-cap count store: deltas SUM per domain (per
+    * origin too under TTL: the sliding-window cap). */
+  private def compactDomainStore(spark: SparkSession, storePath: String,
+      batchId: Long, ttlBatches: Long): Unit =
+    compactBucketedStore(spark, storePath, DomainBucketCol, batchId,
+      fold = foldPer(DomainBucketCol, "domain", sum("n_admitted").as("n_admitted"),
+        ttlBatches),
+      ttlBatches = ttlBatches)
+
+  /** One batch's [[domainCapGateSink]] decision: (`docs` tagged with
+    * domain and bucket, its domain-bearing rows with `admit`). */
+  private def admitDomains(docs: DataFrame, batchId: Long, urlCol: String,
+      storePath: String, perDomain: Int, buckets: Int,
+      suffixCsv: String): (DataFrame, DataFrame) = {
     val host = graft.functions.GraftUrlOps.urlHostCol(col(urlCol))
-    val tagged = batch
+    val tagged = docs
       .withColumn("domain",
         graft.functions.GraftUrlOps.registrableDomainCol(host, suffixCsv))
-      .withColumn(DomainBucketCol,
-        pmod(hash(col("domain")), lit(buckets)))
-      .localCheckpoint() // one derivation feeds rank, joins, and 3 writes
-    // prior admitted counts for ONLY the buckets this batch touches
-    val touched = tagged.filter(col("domain").isNotNull)
-      .select(DomainBucketCol).distinct().collect().map(_.getInt(0)).toSeq
-    val prior =
-      if (!fs.exists(new Path(storePath)) || touched.isEmpty)
-        spark.range(0).select(lit("").as("domain"), lit(0L).as("prior"))
-      else spark.read.parquet(storePath)
-        .filter(col("batch") =!= batchId && // replay: never see own delta
-          col(DomainBucketCol).isin(touched: _*))
-        .groupBy("domain").agg(sum("n_admitted").as("prior"))
+      .withColumn(DomainBucketCol, pmod(hash(col("domain")), lit(buckets)))
+      .localCheckpoint() // one derivation feeds rank, joins, and the writes
+    val prior = priorPerKey(tagged.filter(col("domain").isNotNull), batchId,
+      storePath, DomainBucketCol, "domain", sum("n_admitted"), "prior")
     // within-batch deterministic priority (the stratifiedSample order)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("domain"))
@@ -681,18 +721,16 @@ object CorpusStream {
       .withColumn("admit",
         coalesce(col("prior"), lit(0L)) + col("rk") <= perDomain)
       .localCheckpoint()
-    val outCols = (dataCols :+ "domain").map(col)
-    decided.filter(col("admit")).select(outCols: _*)
-      .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
-    decided.filter(!col("admit")).select(outCols: _*)
-      .unionByName(tagged.filter(col("domain").isNull).select(outCols: _*))
-      .write.mode("overwrite").parquet(s"$rejectedPath/batch=$batchId")
+    (tagged, decided)
+  }
+
+  /** Lands this batch's admitted count per domain into the count store. */
+  private def landAdmitted(decided: DataFrame, batchId: Long, storePath: String): Unit =
     decided.filter(col("admit"))
       .groupBy(col(DomainBucketCol), col("domain"))
       .agg(count(lit(1)).as("n_admitted"))
       .write.partitionBy(DomainBucketCol)
       .mode("overwrite").parquet(s"$storePath/batch=$batchId")
-  }
 
   /** Streaming DECONTAMINATION gate — "protect the eval set from every
     * drop": each arriving micro-batch of embedded documents is checked
@@ -715,13 +753,10 @@ object CorpusStream {
       nPlanes: Int = 4,
       minCosine: Double = 0.8,
       multiprobe: Int = 1): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontamGateBatch(batch, batchId, keptPath, rejectedPath,
-          benchmark, nPlanes, minCosine, multiprobe)
-      }
+    gateSink(docs, checkpointDir) { (batch, batchId) =>
+      decontamGateBatch(batch, batchId, keptPath, rejectedPath,
+        benchmark, nPlanes, minCosine, multiprobe)
+    }
 
   /** One micro-batch of [[decontamGateSink]], callable directly. */
   def decontamGateBatch(
@@ -739,12 +774,12 @@ object CorpusStream {
     // verdict join is total: no doc can vanish from both routes
     val verdict = graft.llm.Contamination.semantic(
       b, benchmark, "doc_id", "embedding", nPlanes, minCosine, multiprobe)
-      .select(col("vec_id").as("doc_id"), col("contaminated"))
+      .select(col("vec_id").as("doc_id"), col(graft.llm.Contamination.Flag))
     val routed = b.join(verdict, Seq("doc_id")).localCheckpoint()
     val outCols = ("doc_id" +: dataCols).map(col)
-    routed.filter(!col("contaminated")).select(outCols: _*)
+    routed.filter(!col(graft.llm.Contamination.Flag)).select(outCols: _*)
       .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
-    routed.filter(col("contaminated")).select(outCols: _*)
+    routed.filter(col(graft.llm.Contamination.Flag)).select(outCols: _*)
       .write.mode("overwrite").parquet(s"$rejectedPath/batch=$batchId")
   }
 
@@ -775,12 +810,9 @@ object CorpusStream {
       pq: graft.llm.Pq.PqModel,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataStreamWriter[Row] =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annIndexBatch(batch, batchId, indexPath, coarse, pq, idCol, vecCol)
-      }
+    gateSink(vectors, checkpointDir) { (batch, batchId) =>
+      annIndexBatch(batch, batchId, indexPath, coarse, pq, idCol, vecCol)
+    }
 
   /** One micro-batch of [[annIndexSink]], callable directly. */
   def annIndexBatch(
@@ -816,12 +848,9 @@ object CorpusStream {
       checkpointDir: String,
       columns: Seq[String] = Nil,
       kmvK: Int = 64): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        profileBatch(batch, batchId, statePath, columns, kmvK)
-      }
+    gateSink(docs, checkpointDir) { (batch, batchId) =>
+      profileBatch(batch, batchId, statePath, columns, kmvK)
+    }
 
   /** One micro-batch of [[profileSink]], callable directly. */
   def profileBatch(
@@ -845,8 +874,8 @@ object CorpusStream {
 
   /** Streaming SEVEN-GATE curation sink — [[graft.llm.Curation.curateV3]]
     * applied drop by drop against persisted artifacts and bucketed history
-    * stores, ONE verdict per document with the batch verdict vocabulary
-    * (first failing gate):
+    * stores, ONE verdict per document, built by the batch verdict builder
+    * over the gate list of [[graft.llm.Curation]] (first failing gate):
     *
     *  1. `exact_dup`    — drop-internal md5 window + the bucketed digest
     *                      index (min id per digest, history ∪ drop);
@@ -916,18 +945,15 @@ object CorpusStream {
       sigBuckets: Int = 64,
       compactEvery: Int = 8,
       ttlBatches: Long = 0): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curateV3GateBatch(batch, batchId, urlCol, keptPath, rejectedPath,
-          digestStorePath, domainStorePath, postingsPath, sigStorePath,
-          nbTokenModel, nbPriors, lmUnigramModel, lmBigramModel, benchmark,
-          acceptLabels, minQuality, minAvgLpMicros, minJaccard, perDomain,
-          contaminationN, maxContamination, suffixCsv, shingleK, perms,
-          nBands, rowsPerBand, digestBuckets, domainBuckets,
-          postingsBuckets, sigBuckets, compactEvery, ttlBatches)
-      }
+    gateSink(docs, checkpointDir) { (batch, batchId) =>
+      curateV3GateBatch(batch, batchId, urlCol, keptPath, rejectedPath,
+        digestStorePath, domainStorePath, postingsPath, sigStorePath,
+        nbTokenModel, nbPriors, lmUnigramModel, lmBigramModel, benchmark,
+        acceptLabels, minQuality, minAvgLpMicros, minJaccard, perDomain,
+        contaminationN, maxContamination, suffixCsv, shingleK, perms,
+        nBands, rowsPerBand, digestBuckets, domainBuckets,
+        postingsBuckets, sigBuckets, compactEvery, ttlBatches)
+    }
 
   /** One micro-batch of [[curateV3GateSink]], callable directly. */
   def curateV3GateBatch(
@@ -968,102 +994,41 @@ object CorpusStream {
     val spark = batch.sparkSession
     // compaction + crash roll-forward at batch START, never after the
     // prior reads (the [[domainCapGateBatch]] ordering argument)
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
+    if (compactsAt(batchId, compactEvery)) {
       // under TTL the admission batch joins each aggregation key (a
       // digest is live in at most one origin at a time — re-admission is
       // only possible after the prior row physically expired)
       compactBucketedStore(spark, digestStorePath, DigestBucketCol, batchId,
-        fold = df => df.groupBy((col(DigestBucketCol) +: col("text_md5") +:
-            (if (ttlBatches > 0) Seq(col("origin_batch")) else Nil)): _*)
-          .agg(min("keep_id").as("keep_id")),
+        fold = foldPer(DigestBucketCol, "text_md5", min("keep_id").as("keep_id"),
+          ttlBatches),
         ttlBatches = ttlBatches)
-      compactBucketedStore(spark, domainStorePath, DomainBucketCol, batchId,
-        fold = df => df.groupBy((col(DomainBucketCol) +: col("domain") +:
-            (if (ttlBatches > 0) Seq(col("origin_batch")) else Nil)): _*)
-          .agg(sum("n_admitted").as("n_admitted")),
-        ttlBatches = ttlBatches)
-      compactBucketedStore(spark, postingsPath, PostingsBucketCol, batchId,
-        ttlBatches = ttlBatches)
-      compactBucketedStore(spark, sigStorePath, SigBucketCol, batchId,
-        ttlBatches = ttlBatches)
+      compactDomainStore(spark, domainStorePath, batchId, ttlBatches)
+      compactNearDupStores(spark, postingsPath, sigStorePath, batchId, ttlBatches)
     }
-    val fs = new Path(digestStorePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val b = batch.localCheckpoint() // feeds all seven gates + routing
     val dataCols = b.columns.toSeq
 
     // gate 1 (exact_dup): drop-window min vs the pruned digest index
-    val digested = b
-      .select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .withColumn("drop_min", min(col("doc_id")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("text_md5"))))
+    val digested = Curation.digestWindow(b)
       .withColumn(DigestBucketCol, pmod(hash(col("text_md5")), lit(digestBuckets)))
       .localCheckpoint() // feeds prior read, verdict join, store delta
-    val exact = {
-      val touched = digested.select(DigestBucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val hist =
-        if (!fs.exists(new Path(digestStorePath)) || touched.isEmpty)
-          spark.range(0).select(lit("").as("text_md5"), lit(0L).as("hist_min"))
-        else spark.read.parquet(digestStorePath)
-          .filter(col("batch") =!= batchId && // replay: never see own delta
-            col(DigestBucketCol).isin(touched: _*))
-          .groupBy("text_md5").agg(min("keep_id").as("hist_min"))
-      digested
-        .join(hist, Seq("text_md5"), "left")
-        .select(col("doc_id"),
-          least(col("drop_min"), coalesce(col("hist_min"), col("drop_min")))
-            .as("keep_id"))
-    }
+    val exact = Curation.exactKeep(digested, priorPerKey(digested, batchId,
+      digestStorePath, DigestBucketCol, "text_md5", min("keep_id"), "hist_min"))
 
-    // gate 2 (domain_capped): the [[domainCapGateBatch]] decision inline
-    val host = graft.functions.GraftUrlOps.urlHostCol(col(urlCol))
-    val tagged = b.select(col("doc_id"), col(urlCol))
-      .withColumn("domain",
-        graft.functions.GraftUrlOps.registrableDomainCol(host, suffixCsv))
-      .withColumn(DomainBucketCol, pmod(hash(col("domain")), lit(domainBuckets)))
-      .localCheckpoint()
-    val decided = {
-      val touched = tagged.filter(col("domain").isNotNull)
-        .select(DomainBucketCol).distinct().collect().map(_.getInt(0)).toSeq
-      val prior =
-        if (!fs.exists(new Path(domainStorePath)) || touched.isEmpty)
-          spark.range(0).select(lit("").as("domain"), lit(0L).as("prior"))
-        else spark.read.parquet(domainStorePath)
-          .filter(col("batch") =!= batchId &&
-            col(DomainBucketCol).isin(touched: _*))
-          .groupBy("domain").agg(sum("n_admitted").as("prior"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("domain"))
-        .orderBy(graft.llm.Sampling.hashBucket(col("doc_id"), 100), col("doc_id"))
-      tagged
-        .filter(col("domain").isNotNull)
-        .withColumn("rk", row_number().over(w))
-        .join(prior, Seq("domain"), "left")
-        .withColumn("admit",
-          coalesce(col("prior"), lit(0L)) + col("rk") <= perDomain)
-        .localCheckpoint() // feeds the verdict join + the count delta
-    }
+    // gate 2 (domain_capped): the [[domainCapGateBatch]] decision
+    val (_, decided) = admitDomains(b.select(col("doc_id"), col(urlCol)), batchId,
+      urlCol, domainStorePath, perDomain, domainBuckets, suffixCsv)
     val winners = decided.filter(col("admit"))
       .select(col("doc_id"), lit(true).as("in_cap"))
 
-    // gates 3-5: zero-shuffle kernel/model projections, chained via
-    // passThrough into ONE pass over b instead of three frames joined
-    // back on doc_id (the Curation.curateV2 inlining — three fewer
-    // verdict joins/exchanges per trigger, guide §2.4)
-    val scored = graft.llm.LangModel.lmScoreWith(
-      graft.llm.TextAnalysis.qualityScore(
-        graft.llm.Classify.nbScoreWith(b, "doc_id", "text",
-          nbTokenModel, nbPriors, passThrough = Seq("text")),
-        "doc_id", "text", passThrough = Seq("text", "predicted_label")),
-      "doc_id", "text", lmUnigramModel, lmBigramModel,
-      passThrough = Seq("quality_score", "predicted_label"))
+    // gates 3-5: one scoring pass over b (the Curation.scored chain)
+    val scores = Curation.scored(b, nbTokenModel, nbPriors, lmUnigramModel, lmBigramModel)
 
     // gate 6: n-gram overlap vs the fixed benchmark (broadcast side)
     val contam = graft.llm.Contamination.overlap(
       b.select(col("doc_id"), col("text")), benchmark, "doc_id", "text",
       n = contaminationN, maxRatio = maxContamination)
-      .select("doc_id", "contaminated")
+      .select("doc_id", graft.llm.Contamination.Flag)
 
     // gate 7: in-drop clusters, representatives vs bucketed history
     val clusters = Dedup.clusters(b.select(col("doc_id")),
@@ -1080,28 +1045,21 @@ object CorpusStream {
       .select(col("doc_id").as("cluster_id"))
       .withColumn("rep_hist_dup", lit(true))
 
-    // the composed verdict: first failing gate, batch-curateV3 vocabulary
-    val verdict = scored
-      .join(exact, Seq("doc_id"))
-      .join(winners, Seq("doc_id"), "left")
-      .join(contam, Seq("doc_id"))
-      .join(clusters, Seq("doc_id"))
-      .join(repHistDup, Seq("cluster_id"), "left")
-      .select(col("doc_id"),
-        when(col("doc_id") =!= col("keep_id"), lit("exact_dup"))
-          .when(col("in_cap").isNull, lit("domain_capped"))
-          .when(col("quality_score") < minQuality, lit("low_quality"))
-          .when(!col("predicted_label").isin(acceptLabels.toSeq: _*), lit("off_label"))
-          .when(col("lp_micros") < lit(minAvgLpMicros) * col("n_pairs"), lit("low_lp"))
-          .when(col("contaminated"), lit("contaminated"))
-          .when(col("doc_id") =!= col("cluster_id") ||
-            coalesce(col("rep_hist_dup"), lit(false)), lit("near_duplicate"))
-          .otherwise(lit("kept")).as("reason"))
+    // the composed verdict: the Curation gate list, history-aware
+    val verdict = Curation.verdict(
+      scores
+        .join(exact, Seq("doc_id"))
+        .join(winners, Seq("doc_id"), "left")
+        .join(contam, Seq("doc_id"))
+        .join(clusters, Seq("doc_id"))
+        .join(repHistDup, Seq("cluster_id"), "left"),
+      Curation.sevenGates(minQuality, acceptLabels, minAvgLpMicros, vsHistory = true))
+      .select("doc_id", "reason")
     val routed = b.join(verdict, Seq("doc_id")).localCheckpoint()
     val outCols = (dataCols :+ "reason").map(col)
-    routed.filter(col("reason") === "kept").select(outCols: _*)
+    routed.filter(col("reason") === Curation.Kept).select(outCols: _*)
       .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
-    routed.filter(col("reason") =!= "kept").select(outCols: _*)
+    routed.filter(col("reason") =!= Curation.Kept).select(outCols: _*)
       .write.mode("overwrite").parquet(s"$rejectedPath/batch=$batchId")
 
     // store deltas — each by its OWN gate rule (gate independence), all
@@ -1112,27 +1070,9 @@ object CorpusStream {
       .filter(col("text_md5").isNotNull) // NULL text carries no digest
       .write.partitionBy(DigestBucketCol)
       .mode("overwrite").parquet(s"$digestStorePath/batch=$batchId")
-    decided.filter(col("admit"))
-      .groupBy(col(DomainBucketCol), col("domain"))
-      .agg(count(lit(1)).as("n_admitted"))
-      .write.partitionBy(DomainBucketCol)
-      .mode("overwrite").parquet(s"$domainStorePath/batch=$batchId")
-    val landSh = shReps.join(repHistDup.select(col("cluster_id").as("doc_id")),
-      Seq("doc_id"), "left_anti")
-      .localCheckpoint() // feeds both near-dup store deltas
-    landSh
-      .withColumn(SigBucketCol, pmod(hash(col("doc_id")), lit(sigBuckets)))
-      .repartition(col(SigBucketCol))
-      .sortWithinPartitions(col("doc_id"))
-      .write.partitionBy(SigBucketCol)
-      .mode("overwrite").parquet(s"$sigStorePath/batch=$batchId")
-    Dedup.bandPostings(landSh, "doc_id", nBands, rowsPerBand)
-      .withColumnRenamed("doc_id", "hist_id")
-      .withColumn(PostingsBucketCol,
-        pmod(hash(col("band"), col("band_hash")), lit(postingsBuckets)))
-      .repartition(col(PostingsBucketCol))
-      .sortWithinPartitions(col("band"), col("band_hash"))
-      .write.partitionBy(PostingsBucketCol)
-      .mode("overwrite").parquet(s"$postingsPath/batch=$batchId")
+    landAdmitted(decided, batchId, domainStorePath)
+    landSignatures(shReps.join(repHistDup.select(col("cluster_id").as("doc_id")),
+      Seq("doc_id"), "left_anti"), batchId, sigStorePath, postingsPath,
+      nBands, rowsPerBand, postingsBuckets, sigBuckets)
   }
 }
