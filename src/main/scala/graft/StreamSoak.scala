@@ -25,9 +25,12 @@ import graft.streaming.ForecastStream
   *    retains for replay (steady-state boundedness); its byte size is
   *    printed.
   *
-  * It exits 1 unless the drained rows equal one batch read of the same
-  * glob (value sum within relative 1e-9), every batch id from 0 to the
-  * last landed in the accumulator, and the file log is within that bound.
+  * It exits 1 at once when the drop's files make no more than
+  * `stopAfter` batches of `maxFilesPerTrigger` (phase 1 could never stop
+  * mid-backfill). After the drain it exits 1 unless the drained rows
+  * equal one batch read of the same glob (value sum within relative
+  * 1e-9), every batch id from 0 to the last landed in the accumulator,
+  * and the file log is within that bound.
   *
   * Usage (glob quoting: the drop glob is `&lt;dir&gt;/&#42;.grib2`):
   *   sbt 'runMain graft.StreamSoak "/tmp/glofas_week/&#42;.grib2"
@@ -47,6 +50,18 @@ object StreamSoak {
     val maxFiles = if (args.length > 2) args(2).toInt else 10
     val stopAfter = if (args.length > 3) args(3).toInt else 10
     val idxCache = if (args.length > 4) Some(args(4)) else None
+    // phase 1 waits for `stopAfter` batches, so the drop must make more:
+    // with fewer the query idles and phase 1 never returns
+    val globPath = new org.apache.hadoop.fs.Path(glob)
+    val files = Option(globPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .globStatus(globPath)).fold(0)(_.count(_.isFile))
+    val batches = (files + maxFiles - 1) / maxFiles
+    if (batches <= stopAfter) {
+      System.err.println(s"STREAM SOAK FAILED: the drop's $files files make $batches " +
+        s"batches at $maxFiles files per trigger, not more than stopAfter = $stopAfter, " +
+        "so phase 1 would never stop mid-backfill")
+      sys.exit(1)
+    }
     val spark = LocalSession()
 
     // batchId → (rows, valueSum): foreachBatch replays the last

@@ -113,6 +113,20 @@ object GraftVecOps {
     bucket
   }
 
+  /** Row-major flattening of a k×dim centroid matrix — the `cents`
+    * argument of [[nearestSqDist]] and [[bestCosine]]; row c occupies
+    * `[c*dim, (c+1)*dim)`. Driver-side, at plan build. Every row must
+    * have the same dimension. */
+  def flatMatrix(
+      rows: scala.collection.Seq[scala.collection.Seq[Double]]): Array[Double] = {
+    val dim = rows.head.length
+    require(rows.forall(_.length == dim),
+      s"centroid dimensions differ: ${rows.map(_.length).distinct.mkString(", ")}")
+    val flat = new Array[Double](rows.length * dim)
+    rows.iterator.zipWithIndex.foreach { case (r, c) => r.copyToArray(flat, c * dim) }
+    flat
+  }
+
   /** Nearest centroid by squared euclidean distance over a row-major
     * flattened k×dim centroid matrix; returns `[best_index, best_sqdist]`
     * as doubles (an index is exact in a double far beyond any real k).

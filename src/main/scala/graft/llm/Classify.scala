@@ -21,8 +21,8 @@ import TextHash._
   *  - '''score''' — ZERO shuffle: the trained model is dimension-sized
   *    (V×L likelihood entries + L priors), so scoring is a per-row fold
   *    over the document's tokens against a literal token→likelihood map,
-  *    exactly the broadcast-kernel discipline of [[Clustering.assign]] /
-  *    [[Similarity.ivfTopKWith]].
+  *    exactly the broadcast-kernel discipline of [[Clustering.kmeans]]'s
+  *    assignment and [[Similarity.ivfTopKWith]].
   *
   * Determinism (what lets the driver's DuckDB gate hash-check a trained
   * model): all likelihoods are quantized to integer micro-logs

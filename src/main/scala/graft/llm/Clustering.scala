@@ -25,11 +25,12 @@ import org.apache.spark.sql.functions._
   * every iteration — and therefore every assignment — is bit-identical on
   * both engines at any parallelism. Ties in the argmin break by cluster id.
   *
-  * The driver-side iteration loop with `localCheckpoint` per round is the
-  * standard Spark shape for iterative ML (same as [[Dedup.clusters]]);
-  * fixed `iters` keeps the oracle expressible as an unrolled CTE chain —
-  * production callers use [[kmeansConverged]] (movement-eps loop) seeded
-  * by the deterministic farthest-first rule ([[farthestFirstSeeds]]).
+  * One driver-side Lloyd loop serves every entry point, with the
+  * centroids held on the driver between rounds (one Spark job per round).
+  * Fixed `iters` ([[kmeans]]) keeps the oracle expressible as an unrolled
+  * CTE chain — production callers use [[kmeansConverged]] (movement-eps
+  * loop) seeded by the deterministic farthest-first rule
+  * ([[farthestFirstSeeds]]).
   */
 object Clustering {
 
@@ -40,9 +41,37 @@ object Clustering {
   private def sqDist(v: Column, c: Column): Column =
     graft.functions.HashFunctions.sqDist(v, c)
 
-  /** One Lloyd assignment: nearest centroid per vector.
-    * `centroids`: (cluster, c: array<double>). Returns (vec_id, v, cluster,
-    * dist).
+  /** Driver-resident centroids (cluster id, components) in the
+    * assignment kernel's tiebreak order: id ascending, nulls first. */
+  private type Centroids = IndexedSeq[(Any, Seq[Double])]
+
+  /** Nearest centroid per vector: (vec_id, v, __ci, dist), `__ci` the
+    * index of the winner in `cents`.
+    *
+    * ZERO-SHUFFLE: the argmin is a per-row compiled kernel over a LITERAL
+    * flattened centroid matrix ([[graft.functions.GraftVecOps
+    * .nearestSqDist]]) — a pure projection of the corpus. The previous
+    * `crossJoin(broadcast) → groupBy(vec_id) → min(struct) + first(v)`
+    * spelling shuffled the whole corpus (with its vectors) every Lloyd
+    * round AND sort-aggregated it (struct/array aggregation buffers are
+    * UnsafeRow-immutable, so HashAggregateExec refuses and both exchange
+    * sides sort corpus×k rows). Because `cents` is in tiebreak order, the
+    * kernel's first-wins rule reproduces `min(struct(dist, cluster))`'s
+    * (dist asc, cluster asc) tiebreak exactly; distances are bit-identical
+    * (same fold order) and the oracle CTE chain still hash-matches. */
+  private def nearest(vecs: DataFrame, cents: Centroids): DataFrame =
+    vecs
+      .select(col("vec_id"), col("v"),
+        graft.functions.HashFunctions.nearestSqDist(col("v"),
+          typedLit(graft.functions.GraftVecOps.flatMatrix(cents.map(_._2))),
+          cents.head._2.length).as("__nd"))
+      .select(col("vec_id"), col("v"),
+        col("__nd").getItem(0).cast("int").as("__ci"),
+        col("__nd").getItem(1).as("dist"))
+
+  /** One Lloyd assignment: (vec_id, v, cluster, dist) — [[nearest]] plus
+    * a broadcast k-row join mapping the matrix index back to the cluster
+    * id.
     *
     * Input contract (shared by every public entry point in this file):
     *  - `vec_id` is UNIQUE. The assignment is a per-row projection, so a
@@ -54,72 +83,20 @@ object Clustering {
     *    nothing) and never silently disappears from the output. Callers
     *    wanting Similarity's norm>0 discipline filter before calling.
     *  - A vector whose length differs from the centroid dimension is an
-    *    ERROR (the kernel raises), not a silent drop.
-    *
-    * ZERO-SHUFFLE: centroids are k tiny driver rows (the discipline this
-    * file already follows — every round collects them for the movement
-    * check), so the argmin is a per-row compiled kernel over a LITERAL
-    * flattened centroid matrix ([[graft.functions.GraftVecOps
-    * .nearestSqDist]]) plus a broadcast k-row join mapping the matrix
-    * index back to the cluster id — a pure projection of the corpus. The
-    * previous `crossJoin(broadcast) → groupBy(vec_id) → min(struct) +
-    * first(v)` spelling shuffled the whole corpus (with its vectors)
-    * every Lloyd round AND sort-aggregated it (struct/array aggregation
-    * buffers are UnsafeRow-immutable, so HashAggregateExec refuses and
-    * both exchange sides sort corpus×k rows) — per round at 100 TB that
-    * is the difference between a map-only pass and a full-corpus
-    * sort-shuffle. Matrix rows are ordered by cluster id (nulls first),
-    * so the kernel's first-wins rule reproduces `min(struct(dist,
-    * cluster))`'s (dist asc, cluster asc) tiebreak exactly; distances are
-    * bit-identical (same fold order) and the oracle CTE chain still
-    * hash-matches. */
-  private def assign(vecs: DataFrame, centroids: DataFrame): DataFrame = {
-    val idType = centroids.schema("cluster").dataType
-    // nulls-first ordering = min(struct)'s null-smallest comparison
-    val rows = centroids.select(col("cluster"), col("c"))
-      .orderBy(col("cluster").asc_nulls_first).collect()
-      .map(r => (r.get(0), r.getSeq[Double](1))).toSeq
-    assignLocal(vecs, rows, idType)
-  }
-
-  /** [[assign]] from driver-resident centroids already in tiebreak order
-    * (cluster asc, nulls first): [[convergedLoop]] holds them as local
-    * state, so re-collecting the k-row frame per round would be a wasted
-    * Spark job — it sorts locally and calls this directly. */
-  private def assignLocal(
-      vecs: DataFrame,
-      sorted: Seq[(Any, Seq[Double])],
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = vecs.sparkSession
-    if (sorted.isEmpty)
+    *    ERROR (the kernel raises), not a silent drop. */
+  private def assign(vecs: DataFrame, cents: Centroids): DataFrame = {
+    val idType = vecs.schema("vec_id").dataType
+    if (cents.isEmpty)
       return vecs
         .select(col("vec_id"), col("v"),
           lit(null).cast(idType).as("cluster"), lit(0.0).as("dist"))
         .filter(lit(false))
-    val cents = sorted.map(_._2)
-    val dim = cents.head.length
-    require(cents.forall(_.length == dim),
-      s"centroid dimensions differ: ${cents.map(_.length).distinct.mkString(", ")}")
-    val flat = new Array[Double](sorted.length * dim)
-    var i = 0
-    while (i < sorted.length) {
-      val c = cents(i)
-      var j = 0
-      while (j < dim) { flat(i * dim + j) = c(j); j += 1 }
-      i += 1
-    }
-    val idxToCluster = localDf(spark,
-      sorted.toIndexedSeq.zipWithIndex.map { case ((id, _), ix) =>
-        org.apache.spark.sql.Row(ix, id) },
+    val idxToCluster = localDf(vecs.sparkSession,
+      cents.zipWithIndex.map { case ((id, _), ix) => org.apache.spark.sql.Row(ix, id) },
       org.apache.spark.sql.types.StructType(Seq(
         field("__ci", org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("cluster", idType, nullable = true))))
-    vecs
-      .select(col("vec_id"), col("v"),
-        graft.functions.HashFunctions.nearestSqDist(col("v"), typedLit(flat), dim).as("__nd"))
-      .select(col("vec_id"), col("v"),
-        col("__nd").getItem(0).cast("int").as("__ci"),
-        col("__nd").getItem(1).as("dist"))
+    nearest(vecs, cents)
       // left join: a NULL vector null-propagates to a NULL __ci, and an
       // inner join would silently drop the row — the documented contract
       // keeps it with cluster = NULL, dist = NULL
@@ -127,69 +104,100 @@ object Clustering {
       .select(col("vec_id"), col("v"), col("cluster"), col("dist"))
   }
 
-  /** Driver-side sort into [[assignLocal]]'s tiebreak order (id asc,
-    * nulls first) for the id types whose local ordering provably matches
-    * Spark's: integral ids naturally, strings by UTF-8 bytes (Spark
-    * compares `UTF8String` binary, NOT Java's UTF-16 `compareTo` — they
-    * diverge on supplementary characters). Returns None for any other
-    * type; callers then pay the k-row collecting [[assign]] instead of
-    * risking a tiebreak divergence. */
-  private def sortForAssign(
-      centroids: Seq[(Any, Seq[Double])],
-      idType: org.apache.spark.sql.types.DataType): Option[Seq[(Any, Seq[Double])]] = {
-    import org.apache.spark.sql.types._
-    val cmp: Option[(Any, Any) => Int] = idType match {
-      case LongType => Some((a, b) =>
-        java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long]))
-      case IntegerType => Some((a, b) =>
-        java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int]))
-      case ShortType => Some((a, b) =>
-        java.lang.Short.compare(a.asInstanceOf[Short], b.asInstanceOf[Short]))
-      case StringType => Some((a, b) => {
-        val x = a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val y = b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val n = math.min(x.length, y.length)
-        var i = 0
-        var r = 0
-        while (r == 0 && i < n) {
-          r = java.lang.Integer.compare(x(i) & 0xff, y(i) & 0xff)
-          i += 1
-        }
-        if (r != 0) r else java.lang.Integer.compare(x.length, y.length)
-      })
-      case _ => None
-    }
-    cmp.map { c =>
-      centroids.sortWith { case ((x, _), (y, _)) =>
-        if (x == null) y != null
-        else if (y == null) false
-        else c(x, y) < 0
-      }
-    }
+  /** `rows` sorted on the driver by their id in Spark's own ordering for
+    * `idType` (Catalyst's `InterpretedOrdering` on the id's `SortOrder`),
+    * so the order is exactly what an `orderBy` inside Spark would give
+    * for every id type — UTF-8 byte order for strings, decimals, NULLs
+    * where `nulls` puts them — without running a job to sort a few rows. */
+  private[llm] def inIdOrder[A](
+      rows: Seq[A],
+      idType: org.apache.spark.sql.types.DataType,
+      nulls: org.apache.spark.sql.catalyst.expressions.NullOrdering)(
+      id: A => Any): Seq[A] = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions._
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ordering = new InterpretedOrdering(Seq(SortOrder(
+      BoundReference(0, idType, nullable = true), Ascending, nulls, Seq.empty)))
+    rows.sortBy(r => InternalRow(toCatalyst(id(r))))(ordering)
   }
 
-  /** Micros-mean centroid update: (cluster, c) with
-    * c(d) = sum(round(v(d)*1e6)) / (n*1e6) per dimension. */
+  /** Micros-mean centroid update over [[nearest]]'s output: (__ci, c)
+    * with c(d) = sum(round(v(d)*1e6)) / (n*1e6) per dimension. */
   private def update(assigned: DataFrame): DataFrame =
     assigned
-      .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("cluster", "dim")
+      .select(col("__ci"), posexplode(col("v")).as(Seq("dim", "x")))
+      .groupBy("__ci", "dim")
       .agg(
         sum(round(col("x") * 1e6).cast("long")).as("s"),
         count(lit(1)).as("n"))
-      .select(col("cluster"), col("dim"),
+      .select(col("__ci"), col("dim"),
         (col("s").cast("double") / (col("n") * 1000000L)).as("cx"))
-      .groupBy("cluster")
+      .groupBy("__ci")
       .agg(transform(
         array_sort(collect_list(struct(col("dim"), col("cx")))),
         e => e.getField("cx")).as("c"))
+
+  /** The Lloyd loop. Centroids are k tiny rows, so they live on the
+    * DRIVER (the Spark-ML iterative discipline): each round is exactly ONE
+    * distributed job — collect the updated centroids from the
+    * assign→update pipeline — and the rest is local arithmetic. The
+    * centroids stay in tiebreak order by construction: `seeds` arrive in
+    * it, and each round's result is the previous list with every entry
+    * replaced by its update, matched by matrix index.
+    *
+    * Stop rule: at most `rounds` updates, and with `eps` also as soon as
+    * the total squared centroid movement drops to `eps`. Empty-cluster
+    * policy: a cluster that loses all its members keeps its centroid
+    * (`keepEmpty`; Lloyd's must not silently drop below k) or drops out
+    * of the set. */
+  private def lloyd(
+      vecs: DataFrame,
+      seeds: Centroids,
+      rounds: Int,
+      eps: Option[Double],
+      keepEmpty: Boolean): Centroids = {
+    var cents = seeds
+    var moved = Double.MaxValue
+    var i = 0
+    while (cents.nonEmpty && i < rounds && eps.forall(moved > _)) {
+      val updated = update(nearest(vecs, cents)).collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+      moved = cents.indices.map { ci =>
+        updated.get(ci).fold(0.0)(cents(ci)._2.lazyZip(_).map((a, b) => (a - b) * (a - b)).sum)
+      }.sum
+      cents = cents.indices.flatMap { ci =>
+        val (id, cOld) = cents(ci)
+        updated.get(ci).orElse(Option.when(keepEmpty)(cOld)).map(id -> _)
+      }
+      i += 1
+    }
+    cents
+  }
+
+  /** The prepared (vec_id, v: array&lt;double&gt;) corpus. */
+  private def prepare(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
+    vectors.select(col(idCol).as("vec_id"), Similarity.asDouble(col(vecCol)).as("v"))
+
+  /** Seed centroids: the k smallest ids AMONG NON-NULL VECTORS
+    * (deterministic, engine-portable, and robust to sparse/offset id
+    * spaces where `vec_id < k` would silently yield fewer than k seeds).
+    * The not-null filter honors the NULL-vector contract of [[assign]]:
+    * a NULL vector can be ASSIGNED (to a NULL cluster) but never SEED — a
+    * NULL centroid would crash the assignment kernel. orderBy+limit
+    * compiles to TakeOrderedAndProject — per-partition top-k, no global
+    * sort — and its rows come back already in tiebreak order (ascending
+    * is nulls first). */
+  private def firstKSeeds(vecs: DataFrame, k: Int): Centroids =
+    vecs.filter(col("v").isNotNull).orderBy(col("vec_id")).limit(k).collect()
+      .map(r => (r.get(0), r.getSeq[Double](1))).toIndexedSeq
 
   /** Lloyd's k-means: `iters` rounds from the first-k-by-id seeds.
     * Returns (vec_id, cluster, dist_micros) of the final assignment.
     *
     * EAGER: like every iterative trainer here, constructing the returned
-    * frame RUNS the training jobs (per-round `localCheckpoint`s plus the
-    * final centroid collect) — the result is a plan over frozen centroids,
+    * frame RUNS the training jobs (the seed collect plus one centroid
+    * collect per round) — the result is a plan over frozen centroids,
     * not a lazy recipe that retrains on each action.
     *
     * @param vectors (idCol, vecCol: array<float>) input
@@ -210,7 +218,10 @@ object Clustering {
     * assignment — (vec_id, v, cluster, dist): the input shape for
     * operators that consume both the cell structure and the vectors
     * (e.g. [[Dedup.semantic]]'s within-cell cosine pruning), saving
-    * those callers a corpus self-join to recover `v`. */
+    * those callers a corpus self-join to recover `v`. A cluster that
+    * empties DROPS from the next round's set (unlike [[kmeansConverged]],
+    * which retains it) — the fixed-iters contract the oracle's unrolled
+    * CTE chain mirrors. */
   def kmeansAssigned(
       vectors: DataFrame,
       idCol: String,
@@ -218,49 +229,8 @@ object Clustering {
       k: Int,
       iters: Int = 2): DataFrame = {
     require(k > 0 && iters > 0, "need k > 0 and iters > 0")
-    val spark = vectors.sparkSession
-    val idType = vectors.select(col(idCol)).schema.head.dataType
-    val vecs = vectors
-      .select(col(idCol).as("vec_id"), Similarity.asDouble(col(vecCol)).as("v"))
-    // seed centroids: the k smallest ids AMONG NON-NULL VECTORS
-    // (deterministic, engine-portable, and robust to sparse/offset id
-    // spaces where `vec_id < k` would silently yield fewer than k seeds;
-    // k-means++ would sharpen quality but needs sequential randomized
-    // passes). The not-null filter honors the NULL-vector contract above:
-    // a NULL vector can be ASSIGNED (to a NULL cluster) but never SEED —
-    // a NULL centroid would crash the assignment kernel. orderBy+limit
-    // compiles to TakeOrderedAndProject — per-partition top-k, no global
-    // sort.
-    //
-    // Centroids are k tiny rows, so they live on the DRIVER between
-    // rounds (the convergedLoop discipline): each round is exactly ONE
-    // distributed job — collect the k updated centroids — instead of a
-    // k-row checkpoint job plus a re-collect inside the next assignment.
-    // NOTE the fixed-iters contract is preserved exactly: the next
-    // round's centroid set is update()'s output AS IS — a cluster that
-    // empties DROPS (unlike kmeansConverged, which retains it).
-    var centroids: Seq[(Any, Seq[Double])] = vecs
-      .filter(col("v").isNotNull)
-      .orderBy(col("vec_id"))
-      .limit(k)
-      .collect()
-      .map(r => (r.get(0), r.getSeq[Double](1))).toSeq
-    def centroidDf: DataFrame = localDf(spark,
-      centroids.map { case (id, c) => org.apache.spark.sql.Row(id, c) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cluster", idType, nullable = true),
-        field("c", doubleArray))))
-    def assignCurrent(): DataFrame = sortForAssign(centroids, idType) match {
-      case Some(s) => assignLocal(vecs, s, idType)
-      case None => assign(vecs, centroidDf)
-    }
-    var i = 0
-    while (i < iters - 1) {
-      centroids = update(assignCurrent()).collect()
-        .map(r => (r.get(0), r.getSeq[Double](1))).toSeq
-      i += 1
-    }
-    assignCurrent()
+    val vecs = prepare(vectors, idCol, vecCol)
+    assign(vecs, lloyd(vecs, firstKSeeds(vecs, k), iters - 1, eps = None, keepEmpty = false))
   }
 
   /** Deterministic farthest-first (Gonzalez) seeding — the derandomized
@@ -296,15 +266,13 @@ object Clustering {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    val spark = vectors.sparkSession
-    val idType = vectors.select(col(idCol)).schema.head.dataType
-    val vecs = vectors
-      .select(col(idCol).as("vec_id"), Similarity.asDouble(col(vecCol)).as("v"))
+    val vecs = prepare(vectors, idCol, vecCol)
     val rows = farthestFirstSeedsDriver(vecs, k)
       .map { case (id, c, dm) => org.apache.spark.sql.Row(id, c, dm) }
-    localDf(spark, rows, org.apache.spark.sql.types.StructType(Seq(
+    localDf(vectors.sparkSession, rows, org.apache.spark.sql.types.StructType(Seq(
       // nullable: a NULL-id corpus row may legitimately become a seed
-      org.apache.spark.sql.types.StructField("cluster", idType, nullable = true),
+      org.apache.spark.sql.types.StructField(
+        "cluster", vecs.schema("vec_id").dataType, nullable = true),
       field("c", doubleArray),
       field("dmin_micros", org.apache.spark.sql.types.LongType))))
   }
@@ -387,14 +355,8 @@ object Clustering {
     * production loop the fixed-`iters` [[kmeans]] trades away for oracle
     * expressibility. Seeds come from [[farthestFirstSeeds]] (default) or
     * the first k ids. A cluster that loses all members keeps its previous
-    * centroid (Lloyd's must not silently drop below k).
-    *
-    * Centroids are k tiny rows, so they live on the DRIVER (the Spark-ML
-    * iterative discipline): each round is exactly ONE distributed job —
-    * collect the k updated centroids from the assign→update pipeline —
-    * and the empty-cluster retention plus movement check are free local
-    * arithmetic. No per-round join, checkpoint, or second aggregate; the
-    * corpus is never collected.
+    * centroid (Lloyd's must not silently drop below k). Each round is one
+    * Spark job and the corpus is never collected.
     *
     * Returns (vec_id, cluster, dist_micros) of the final assignment. */
   def kmeansConverged(
@@ -405,19 +367,21 @@ object Clustering {
       eps: Double = 1e-9,
       maxIters: Int = 20,
       farthestFirst: Boolean = true): DataFrame = {
-    val (vecs, centroidDf) =
-      convergedLoop(vectors, idCol, vecCol, k, eps, maxIters, farthestFirst)
-    assign(vecs, centroidDf)
+    val (vecs, cents) = converged(vectors, idCol, vecCol, k, eps, maxIters, farthestFirst)
+    assign(vecs, cents)
       .select(col("vec_id"), col("cluster"),
         round(col("dist") * 1e6).cast("long").as("dist_micros"))
   }
 
-  /** The trained model: (prepared corpus, converged centroid table).
-    * The corpus comes back as the loop's `localCheckpoint`ed
+  /** The trained model: (prepared corpus, converged (cluster, c:
+    * array&lt;double&gt;) centroid table) — e.g. the coarse quantizer for
+    * [[Similarity.ivfTopKWith]] (rename `cluster`→`centroid_id`,
+    * `c`→`vc`). The corpus comes back as the loop's `localCheckpoint`ed
     * (vec_id, v: array&lt;double&gt;) — downstream consumers (e.g.
     * [[Similarity.ivfTopKWith]] search over the same vectors) should read
     * THIS instead of re-scanning the source, so the materialization the
-    * training paid for is reused rather than duplicated. */
+    * training paid for is reused rather than duplicated. The centroid
+    * table is driver-built: reading it runs no job. */
   def kmeansConvergedModel(
       vectors: DataFrame,
       idCol: String,
@@ -425,77 +389,41 @@ object Clustering {
       k: Int,
       eps: Double = 1e-9,
       maxIters: Int = 20,
-      farthestFirst: Boolean = true): (DataFrame, DataFrame) =
-    convergedLoop(vectors, idCol, vecCol, k, eps, maxIters, farthestFirst)
+      farthestFirst: Boolean = true): (DataFrame, DataFrame) = {
+    val (vecs, cents) = converged(vectors, idCol, vecCol, k, eps, maxIters, farthestFirst)
+    (vecs, localDf(vecs.sparkSession,
+      cents.map { case (id, c) => org.apache.spark.sql.Row(id, c) },
+      org.apache.spark.sql.types.StructType(Seq(
+        // nullable: a NULL-id corpus row may legitimately seed a cluster
+        org.apache.spark.sql.types.StructField(
+          "cluster", vecs.schema("vec_id").dataType, nullable = true),
+        field("c", doubleArray)))))
+  }
 
-  /** Just the converged (cluster, c: array&lt;double&gt;) centroid table —
-    * e.g. the coarse quantizer for [[Similarity.ivfTopKWith]] (rename
-    * `cluster`→`centroid_id`, `c`→`vc`). Prefer [[kmeansConvergedModel]]
-    * when the same corpus is consumed downstream. */
-  def kmeansConvergedCentroids(
-      vectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      eps: Double = 1e-9,
-      maxIters: Int = 20,
-      farthestFirst: Boolean = true): DataFrame =
-    kmeansConvergedModel(vectors, idCol, vecCol, k, eps, maxIters, farthestFirst)._2
-
-  /** Shared Lloyd-to-convergence loop: returns the checkpointed prepared
-    * corpus and the final driver-built centroid table. */
-  private def convergedLoop(
+  /** [[lloyd]] to convergence: the checkpointed prepared corpus and the
+    * final centroids in tiebreak order. */
+  private def converged(
       vectors: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
       eps: Double,
       maxIters: Int,
-      farthestFirst: Boolean): (DataFrame, DataFrame) = {
+      farthestFirst: Boolean): (DataFrame, Centroids) = {
     require(k > 0 && maxIters > 0 && eps >= 0, "need k > 0, maxIters > 0, eps >= 0")
-    val spark = vectors.sparkSession
-    val idType = vectors.select(col(idCol)).schema.head.dataType
     // materialize the prepared corpus ONCE: every Lloyd round re-reads it,
     // and re-scanning the source + float→double conversion per round would
     // multiply the scan cost by the iteration count (the same input-caching
     // discipline Spark ML's iterative trainers follow)
-    val vecs = vectors
-      .select(col(idCol).as("vec_id"), Similarity.asDouble(col(vecCol)).as("v"))
-      .localCheckpoint()
-    // seeds come from NON-NULL vectors only (same contract note as
-    // kmeansAssigned: NULL vectors assign, they never seed)
-    var centroids: Seq[(Any, Seq[Double])] =
-      if (farthestFirst) farthestFirstSeedsDriver(vecs, k).map(s => (s._1, s._2))
-      else vecs.filter(col("v").isNotNull).orderBy(col("vec_id")).limit(k).collect()
-        .map(r => (r.get(0), r.getSeq[Double](1))).toSeq
-    def centroidDf: DataFrame = localDf(spark,
-      centroids.map { case (id, c) => org.apache.spark.sql.Row(id, c) },
-      org.apache.spark.sql.types.StructType(Seq(
-        // nullable: a NULL-id corpus row may legitimately seed a cluster
-        org.apache.spark.sql.types.StructField("cluster", idType, nullable = true),
-        field("c", doubleArray))))
-    // The loop holds the centroids on the driver, so each round sorts them
-    // locally into assign's tiebreak order instead of collecting the k-row
-    // frame back — one Spark job per round (the update collect), same as
-    // the pre-kernel shape. Falls back to the collecting assign for id
-    // types without a driver-side Spark-ordering equivalent.
-    def assignCurrent(): DataFrame = sortForAssign(centroids, idType) match {
-      case Some(s) => assignLocal(vecs, s, idType)
-      case None => assign(vecs, centroidDf)
-    }
-    var moved = Double.MaxValue
-    var i = 0
-    while (moved > eps && i < maxIters) {
-      val updated = update(assignCurrent()).collect()
-        .map(r => r.get(0) -> r.getSeq[Double](1)).toMap
-      val next = centroids.map { case (id, cOld) =>
-        val cNew = updated.getOrElse(id, cOld) // empty cluster keeps its centroid
-        (id, cNew, cOld.lazyZip(cNew).map((a, b) => (a - b) * (a - b)).sum)
-      }
-      moved = next.map(_._3).sum
-      centroids = next.map(t => (t._1, t._2))
-      i += 1
-    }
-    (vecs, centroidDf)
+    val vecs = prepare(vectors, idCol, vecCol).localCheckpoint()
+    // farthest-first seeds arrive in selection order: the one place the
+    // loop's centroids need sorting into tiebreak order
+    val seeds =
+      if (farthestFirst)
+        inIdOrder(farthestFirstSeedsDriver(vecs, k).map(s => (s._1, s._2)),
+          vecs.schema("vec_id").dataType,
+          org.apache.spark.sql.catalyst.expressions.NullsFirst)(_._1).toIndexedSeq
+      else firstKSeeds(vecs, k)
+    (vecs, lloyd(vecs, seeds, maxIters, Some(eps), keepEmpty = true))
   }
 }

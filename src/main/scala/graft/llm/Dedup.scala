@@ -786,11 +786,12 @@ object Dedup {
     * the scan — a cell that large means k is mis-sized, and its members
     * are all KEPT (the conservative failure mode, same posture as
     * [[MaxBucket]]). The clustering itself is the zero-shuffle-assignment
-    * Lloyd of [[Clustering.kmeansAssigned]]. (Non-long id types take the
-    * LSH-bucket pair-expansion fallback: nested-transform pairs + two
+    * Lloyd of [[Clustering.kmeansAssigned]] for every id type. Only the
+    * in-cell scan depends on it: non-long ids take the LSH-bucket
+    * pair-expansion fallback (nested-transform pairs + two
     * vector-recovery joins — value-identical, but it ships both vectors
     * per CANDIDATE pair, O(m²·dim) exchange bytes; measured 157 s vs ~4 s
-    * for the kernel path on C1's 200k vectors.)
+    * for the kernel path on C1's 200k vectors).
     *
     * Contracts: ids unique/non-null ([[Clustering]]'s contract); NULL
     * vectors (NULL cluster) and zero-norm vectors are never compared —

@@ -3,15 +3,19 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftVecOps
 
 /** Product quantization (Jégou, Douze, Schmid 2011) — the memory-bound
   * end of the ANN ladder ([[Similarity]]: brute → sign-LSH → IVF →
   * IVF-trained; PQ compresses each vector to `m` sub-codes so a
   * 10⁹-vector index fits executor memory: 64 float32 dims = 256 B become
   * m bytes). Each of the `m` subspaces trains its own k-codeword
-  * codebook by the SAME deterministic Lloyd discipline as
-  * [[Clustering.kmeans]] (first-k-by-id seeds, micros-integer centroid
-  * means, (dist asc, code asc) argmin ties), so the trained codebook,
+  * codebook by the deterministic Lloyd discipline of [[Clustering]]
+  * (first-k-by-id seeds and fixed rounds as in [[Clustering.kmeans]],
+  * micros-integer centroid means, (dist asc, code asc) argmin ties; an
+  * emptied codeword keeps its centroid, as in
+  * [[Clustering.kmeansConverged]]) in its own multi-subspace loop, one
+  * corpus pass per round for all subspaces, so the trained codebook,
   * the encoding, and the asymmetric-distance search are all exactly
   * mirrorable by the driver's DuckDB gate — an unusual property for an
   * ANN index, and the reason the registry can hash-check it.
@@ -49,24 +53,13 @@ object Pq {
     def subDim: Int = dim / m
   }
 
-  private def flat(sub: Array[Array[Double]]): Array[Double] = {
-    val sd = sub.head.length
-    val out = new Array[Double](sub.length * sd)
-    var i = 0
-    while (i < sub.length) {
-      System.arraycopy(sub(i), 0, out, i * sd, sd)
-      i += 1
-    }
-    out
-  }
-
   /** Per-subspace argmin code columns over the model's literal matrices:
     * `__c0 … __c(m-1)`. */
   private def codeCols(v: Column, model: PqModel): Seq[Column] =
     (0 until model.m).map { s =>
       graft.functions.HashFunctions.nearestSqDist(
         slice(v, s * model.subDim + 1, model.subDim),
-        typedlit(flat(model.cents(s)).toSeq), model.subDim)
+        typedlit(GraftVecOps.flatMatrix(model.cents(s).map(_.toSeq)).toSeq), model.subDim)
         .getItem(0).cast("int").as(s"__c$s")
     }
 
@@ -153,7 +146,7 @@ object Pq {
     * quantizer of [[ivfPqSearch]]. */
   private def coarseFlat(coarse: PqModel): Seq[Double] = {
     require(coarse.m == 1, s"coarse quantizer must be m=1, got m=${coarse.m}")
-    flat(coarse.cents(0)).toSeq
+    GraftVecOps.flatMatrix(coarse.cents(0).map(_.toSeq)).toSeq
   }
 
   /** Per-row coarse cell + residual columns: `__cell` (argmin cell by the

@@ -192,14 +192,15 @@ object Similarity {
     * NaN cosine would swallow the whole corpus — members re-route to
     * their next cell; mirrored in the q_ann_ivf oracle, AND nc > 0). */
   private def quantizerRows(
-      centroidTable: DataFrame): (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.DataType) = {
+      centroidTable: DataFrame): (Seq[org.apache.spark.sql.Row], org.apache.spark.sql.types.DataType) = {
     val centroids = centroidTable.select(
       col("centroid_id"), asDouble(col("vc")).as("vc"),
       sqrt(kdot(asDouble(col("vc")), asDouble(col("vc")))).as("nc"))
       .filter(col("nc") > 0)
-    val rows = centroids.select(col("centroid_id"), col("vc"), col("nc"))
-      .orderBy(col("centroid_id").asc_nulls_last).collect()
-    (rows, centroids.schema("centroid_id").dataType)
+    val cellType = centroids.schema("centroid_id").dataType
+    val rows = Clustering.inIdOrder(centroids.collect().toSeq, cellType,
+      org.apache.spark.sql.catalyst.expressions.NullsLast)(_.get(0))
+    (rows, cellType)
   }
 
   /** (cell, vec_id, vn, nn, c_cos): per-row compiled-kernel argmax over
@@ -207,20 +208,11 @@ object Similarity {
     * join — a pure projection; no corpus shuffle, no aggregate. */
   private def kernelAssigned(
       base: DataFrame,
-      centRows: Array[org.apache.spark.sql.Row],
+      centRows: Seq[org.apache.spark.sql.Row],
       cellType: org.apache.spark.sql.types.DataType): DataFrame = {
     val cvecs = centRows.map(_.getSeq[Double](1))
+    val flat = graft.functions.GraftVecOps.flatMatrix(cvecs)
     val dim = cvecs.head.length
-    require(cvecs.forall(_.length == dim),
-      s"centroid dimensions differ: ${cvecs.map(_.length).distinct.mkString(", ")}")
-    val flat = new Array[Double](centRows.length * dim)
-    var ci = 0
-    while (ci < centRows.length) {
-      val cv = cvecs(ci)
-      var j = 0
-      while (j < dim) { flat(ci * dim + j) = cv(j); j += 1 }
-      ci += 1
-    }
     val ncs = centRows.map(_.getDouble(2))
     val spark = base.sparkSession
     val idxToCell = spark.createDataFrame(
@@ -271,8 +263,8 @@ object Similarity {
 
   /** [[ivfTopK]] against a TRAINED coarse quantizer: `centroids` is any
     * (centroid_id, vc: array&lt;double&gt;) table — in production the
-    * [[Clustering.kmeansConvergedCentroids]] output, which places cells
-    * where the vectors actually are.
+    * centroid table of [[Clustering.kmeansConvergedModel]], which places
+    * cells where the vectors actually are.
     *
     * Cell assignment is ZERO-SHUFFLE: the quantizer is k tiny rows (it is
     * broadcast in any formulation — materializing it on the driver is the
@@ -290,7 +282,8 @@ object Similarity {
     * division order) and the q_ann_ivf oracle still hash-matches.
     *
     * EAGER: building the returned frame `collect()`s the centroid table —
-    * Spark jobs run at CONSTRUCTION time, and the quantizer is frozen as
+    * Spark jobs run at CONSTRUCTION time (none for a driver-built table,
+    * which the collect reads in place), and the quantizer is frozen as
     * of that moment (a centroid table that changes between construction
     * and execution is not re-read, unlike the old fully-lazy broadcast-
     * join plan). Callers building plans ahead of execution should call

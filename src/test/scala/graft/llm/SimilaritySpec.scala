@@ -45,7 +45,7 @@ class SimilaritySpec extends SparkSpec {
       0L -> Seq(1f, 0f, 0.05f), 1L -> Seq(1f, 0.02f, 0f), 2L -> Seq(0.98f, 0f, 0f),
       10L -> Seq(0f, 1f, 0.05f), 11L -> Seq(0f, 0.97f, 0f), 12L -> Seq(0.02f, 1f, 0f))
     val quantizer = Clustering
-      .kmeansConvergedCentroids(d, "vec_id", "embedding", k = 2, maxIters = 5)
+      .kmeansConvergedModel(d, "vec_id", "embedding", k = 2, maxIters = 5)._2
       .select(col("cluster").as("centroid_id"), col("c").as("vc"))
     val got = Similarity.ivfTopKWith(d, "vec_id", "embedding", quantizer,
       queryIds = Seq(0L), k = 2, nProbes = 1)
