@@ -112,10 +112,8 @@ object Classify {
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("loglik_micros",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    val spark = docs.sparkSession
     if (vocab.isEmpty || labels.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      return DriverTable(docs.sparkSession, schema, Nil)
     val inVocab = tokCounts.filter(col("token").isin(vocab: _*))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val vSize = vocab.length.toLong
@@ -127,7 +125,7 @@ object Classify {
         graft.functions.GraftVecOps.roundAsSpark(
           StrictMath.log((cnt + 1L).toDouble / (tl(l) + vSize).toDouble) * 1e6))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    DriverTable(docs.sparkSession, schema, rows)
   }
 
   /** Label priors: `(label, n_docs, prior_micros)` with
@@ -143,7 +141,6 @@ object Classify {
       .agg(count(lit(1)).as("n_docs"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val nTotal = labels.map(_._2).sum
-    val spark = docs.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("label",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -156,7 +153,7 @@ object Classify {
         graft.functions.GraftVecOps.roundAsSpark(
           StrictMath.log(n.toDouble / nTotal.toDouble) * 1e6))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    DriverTable(docs.sparkSession, schema, rows)
   }
 
   /** Score every document against a trained model: ZERO-shuffle pure

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * which documents its deterministic seed pick as a k-means drop-in).
   *
   * Scale shape per iteration:
-  *  - assignment: centroids are k rows — broadcast over the unshuffled
-  *    corpus scan, argmin by squared euclidean distance (sequential-fold
-  *    arithmetic, same discipline as [[Similarity]]);
+  *  - assignment: centroids are k rows — a literal matrix over the
+  *    unshuffled corpus scan, argmin by squared euclidean distance
+  *    (sequential-fold arithmetic, same discipline as [[Similarity]]);
   *  - update: vectors `posexplode` to (cluster, dim, component) and hash-
   *    aggregate — map-side partial agg collapses each partition to at most
   *    k*dim rows before anything ships, so the shuffle is O(k*dim), not
@@ -70,18 +70,19 @@ object Clustering {
         col("__nd").getItem(1).as("dist"))
 
   /** One Lloyd assignment: (vec_id, v, cluster, dist) — [[nearest]] plus
-    * a broadcast k-row join mapping the matrix index back to the cluster
-    * id.
+    * a positional lookup of the matrix index in a literal array of the
+    * cluster ids ([[centroidIds]]).
     *
     * Input contract (shared by every public entry point in this file):
     *  - `vec_id` is UNIQUE. The assignment is a per-row projection, so a
     *    duplicate id yields one output row PER input row (each weighted
     *    separately in the centroid update) — there is no per-id collapse.
     *  - A NULL vector is kept with a NULL cluster and NULL dist (the
-    *    kernel null-propagates and the index join is a left join) — it
-    *    never reaches the centroid update (`posexplode` of NULL emits
-    *    nothing) and never silently disappears from the output. Callers
-    *    wanting Similarity's norm>0 discipline filter before calling.
+    *    kernel null-propagates, and `element_at` of a NULL index is
+    *    NULL) — it never reaches the centroid update (`posexplode` of
+    *    NULL emits nothing) and never silently disappears from the
+    *    output. Callers wanting Similarity's norm>0 discipline filter
+    *    before calling.
     *  - A vector whose length differs from the centroid dimension is an
     *    ERROR (the kernel raises), not a silent drop. */
   private def assign(vecs: DataFrame, cents: Centroids): DataFrame = {
@@ -91,18 +92,21 @@ object Clustering {
         .select(col("vec_id"), col("v"),
           lit(null).cast(idType).as("cluster"), lit(0.0).as("dist"))
         .filter(lit(false))
-    val idxToCluster = localDf(vecs.sparkSession,
-      cents.zipWithIndex.map { case ((id, _), ix) => org.apache.spark.sql.Row(ix, id) },
-      org.apache.spark.sql.types.StructType(Seq(
-        field("__ci", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cluster", idType, nullable = true))))
     nearest(vecs, cents)
-      // left join: a NULL vector null-propagates to a NULL __ci, and an
-      // inner join would silently drop the row — the documented contract
-      // keeps it with cluster = NULL, dist = NULL
-      .join(broadcast(idxToCluster), Seq("__ci"), "left")
-      .select(col("vec_id"), col("v"), col("cluster"), col("dist"))
+      .select(col("vec_id"), col("v"),
+        element_at(centroidIds(cents.map(_._1), idType), col("__ci") + 1).as("cluster"),
+        col("dist"))
   }
+
+  /** The centroid ids as one array literal of the id's own type, indexed
+    * by the kernels' matrix index (`element_at(ids, index + 1)`): the
+    * index→id map is a projection, with no join and no broadcast job. */
+  private[llm] def centroidIds(
+      ids: Seq[Any],
+      idType: org.apache.spark.sql.types.DataType): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(ids,
+        org.apache.spark.sql.types.ArrayType(idType, containsNull = true)))
 
   /** `rows` sorted on the driver by their id in Spark's own ordering for
     * `idType` (Catalyst's `InterpretedOrdering` on the id's `SortOrder`),
@@ -269,24 +273,18 @@ object Clustering {
     val vecs = prepare(vectors, idCol, vecCol)
     val rows = farthestFirstSeedsDriver(vecs, k)
       .map { case (id, c, dm) => org.apache.spark.sql.Row(id, c, dm) }
-    localDf(vectors.sparkSession, rows, org.apache.spark.sql.types.StructType(Seq(
+    DriverTable(vectors.sparkSession, org.apache.spark.sql.types.StructType(Seq(
       // nullable: a NULL-id corpus row may legitimately become a seed
       org.apache.spark.sql.types.StructField(
         "cluster", vecs.schema("vec_id").dataType, nullable = true),
       field("c", doubleArray),
-      field("dmin_micros", org.apache.spark.sql.types.LongType))))
+      field("dmin_micros", org.apache.spark.sql.types.LongType))), rows)
   }
 
   private def field(name: String, t: org.apache.spark.sql.types.DataType) =
     org.apache.spark.sql.types.StructField(name, t, nullable = false)
   private def doubleArray = org.apache.spark.sql.types.ArrayType(
     org.apache.spark.sql.types.DoubleType, containsNull = false)
-  private def localDf(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
 
   /** Driver-side core of [[farthestFirstSeeds]]: takes the PREPARED
     * (vec_id, v: array&lt;double&gt;) corpus so callers that already
@@ -391,13 +389,13 @@ object Clustering {
       maxIters: Int = 20,
       farthestFirst: Boolean = true): (DataFrame, DataFrame) = {
     val (vecs, cents) = converged(vectors, idCol, vecCol, k, eps, maxIters, farthestFirst)
-    (vecs, localDf(vecs.sparkSession,
-      cents.map { case (id, c) => org.apache.spark.sql.Row(id, c) },
+    (vecs, DriverTable(vecs.sparkSession,
       org.apache.spark.sql.types.StructType(Seq(
         // nullable: a NULL-id corpus row may legitimately seed a cluster
         org.apache.spark.sql.types.StructField(
           "cluster", vecs.schema("vec_id").dataType, nullable = true),
-        field("c", doubleArray)))))
+        field("c", doubleArray))),
+      cents.map { case (id, c) => org.apache.spark.sql.Row(id, c) }))
   }
 
   /** [[lloyd]] to convergence: the checkpointed prepared corpus and the

@@ -84,7 +84,6 @@ object Collocations {
       .map(r => r.getString(0) -> r.getLong(1))
     val cOf = vocabRows.toMap
     val vocabSeq = vocabRows.map(_._1).toSeq
-    val spark = docs.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("t1",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -99,8 +98,7 @@ object Collocations {
       org.apache.spark.sql.types.StructField("pmi_micros",
         org.apache.spark.sql.types.LongType, nullable = false)))
     if (vocabSeq.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      return DriverTable(docs.sparkSession, schema, Nil)
     // sum over zero rows is SQL NULL → 0 (vocabSeq nonempty implies a
     // non-null T; P can still be null on a pairless corpus)
     val tTotV = Option(obsU.get.apply("t_total"))
@@ -120,7 +118,7 @@ object Collocations {
             (cnt.toDouble * tTotV * tTotV) /
               (pTotV.toDouble * cc1 * cc2)) * 1e6))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    DriverTable(docs.sparkSession, schema, rows)
   }
 
   /** Apply a trained phrase table (the word2phrase second half): greedy

@@ -244,11 +244,11 @@ object Dedup {
     * per-round checkpoint actions and exchanges (the sf0.1 scaling pin
     * measured the loop job-floor-bound: 8-core ≈ 32-core until the
     * graph outgrows the driver anyway). Returns the (doc_id, cluster_id)
-    * rows for nodes that touch an edge, as a LOCAL relation — the
-    * universe join against it broadcasts instead of shuffling. Result is
-    * identical to the loop's (min reachable id; iteration-order
-    * independent), so the same oracles pin it. */
-  private def smallGraphLabels(
+    * rows for nodes that touch an edge, as a [[DriverTable]] — its size
+    * is known, so the universe join against it broadcasts instead of
+    * shuffling. Result is identical to the loop's (min reachable id;
+    * iteration-order independent), so the same oracles pin it. */
+  private[llm] def smallGraphLabels(
       edges: Array[(Long, Long)],
       spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val parent = new java.util.HashMap[Long, java.lang.Long]()
@@ -273,13 +273,13 @@ object Dedup {
       val n = it.next().longValue()
       rows += org.apache.spark.sql.Row(n, find(n))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
+    DriverTable(spark,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+          org.apache.spark.sql.types.LongType, nullable = false))),
+      rows.toSeq)
   }
 
   /** Shared tail of both [[clusters]] paths: re-attach singletons by a

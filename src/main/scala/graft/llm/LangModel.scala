@@ -45,17 +45,15 @@ object LangModel {
       vocabSize: Int = 64): DataFrame = {
     // ONE corpus pass (tokenize + count + top-V TakeOrdered), collected
     // (≤ V rows — dimension-sized), then driver arithmetic builds the
-    // table as a LOCAL relation (r22): the previous distributed tail
-    // paid a crossJoin-broadcast plan per reference, and every consumer
-    // (bigram build ×3 broadcasts, score collect) now reads the local
-    // rows without a job. StrictMath.log / roundAsSpark are bit-identical
-    // to the previous log/round SQL (NbTrainDriverMathSpec).
+    // table as a DriverTable: every consumer (the bigram build's vocab
+    // collect, the score collect) reads its rows without a job.
+    // StrictMath.log / roundAsSpark are bit-identical to the log/round
+    // SQL spelling (NbTrainDriverMathSpec).
     val top = docs.select(explode(wordTokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token").asc).limit(vocabSize)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val vSize = top.length.toLong
-    val spark = docs.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("token",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -68,7 +66,7 @@ object LangModel {
         graft.functions.GraftVecOps.roundAsSpark(
           StrictMath.log(1.0 / (c + vSize).toDouble) * 1e6))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    DriverTable(docs.sparkSession, schema, rows)
   }
 
   /** Sparse bigram table restricted to the vocab:
@@ -78,28 +76,27 @@ object LangModel {
       idCol: String,
       textCol: String,
       vocabSize: Int = 64): DataFrame =
-    // the unigram table is a LOCAL relation since r22 (one corpus pass
-    // inside lmUnigrams, collected) — its three broadcast references
-    // below re-read driver rows, not the corpus, so no checkpoint
+    // the unigram table is a DriverTable (one corpus pass inside
+    // lmUnigrams, collected): lmBigramsWith's vocab collect reads its
+    // rows in place, not the corpus, so no checkpoint
     lmBigramsWith(docs, textCol, lmUnigrams(docs, idCol, textCol, vocabSize))
 
   /** [[lmBigrams]] over an already-materialized unigram table (callers
     * that train both tables — [[lmScore]], [[ccnetBuckets]],
     * [[graft.llm.CurationArtifacts]] — compute the corpus unigram pass
-    * exactly once and reuse it here). `uni` must be small/materialized:
-    * it is broadcast three times. */
+    * exactly once and reuse it here). `uni` must be small: it is
+    * collected to the driver. */
   def lmBigramsWith(
       docs: DataFrame,
       textCol: String,
       uni: DataFrame): DataFrame = {
     // vocab + counts from the (dimension-sized) unigram table: one
-    // bounded collect — free when uni is the r22 local relation
+    // bounded collect — runs no job when uni is a DriverTable
     val uniRows = uni.select("token", "cnt").collect()
       .map(r => r.getString(0) -> r.getLong(1))
     val vSize = uniRows.length.toLong
     val c1 = uniRows.toMap
     val vocab = uniRows.map(_._1).toSeq
-    val spark = docs.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("t1",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -110,8 +107,7 @@ object LangModel {
       org.apache.spark.sql.types.StructField("loglik_micros",
         org.apache.spark.sql.types.LongType, nullable = false)))
     if (vocab.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      return DriverTable(docs.sparkSession, schema, Nil)
     val pairs = docs
       .select(bindOnce(wordTokens(col(textCol)), t =>
         // size guard: Spark's sequence(1, 0) DESCENDS ([1, 0]) instead of
@@ -124,11 +120,9 @@ object LangModel {
       .select(col("p.t1").as("t1"), col("p.t2").as("t2"))
       .groupBy("t1", "t2").agg(count(lit(1)).as("cnt"))
     // the sparse table is ≤ vocab² rows — restrict the aggregated pairs
-    // to the vocab (same rows the two broadcast joins kept) and build it
-    // on the driver (r22, the nbTrain discipline: the distributed tail
-    // paid broadcast-build jobs per reference plus the score collect's
-    // multi-stage plan; driver math is bit-identical —
-    // NbTrainDriverMathSpec)
+    // to the vocab and build it on the driver (the nbTrain discipline:
+    // the score collect then reads it without a job; driver math is
+    // bit-identical to the SQL spelling — NbTrainDriverMathSpec)
     val kept = pairs
       .filter(col("t1").isin(vocab: _*) && col("t2").isin(vocab: _*))
       .collect()
@@ -138,7 +132,7 @@ object LangModel {
         graft.functions.GraftVecOps.roundAsSpark(
           StrictMath.log((cnt + 1L).toDouble / (c1(t1) + vSize).toDouble) * 1e6))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    DriverTable(docs.sparkSession, schema, rows)
   }
 
   /** Score every document against trained tables: (doc_id,
@@ -185,7 +179,7 @@ object LangModel {
       passThrough: Seq[String] = Nil): DataFrame = {
     // ONE corpus unigram pass feeds both the score collect and the bigram
     // build (lmBigrams would otherwise re-train its own copy); the table
-    // is a local relation since r22, so no checkpoint is needed to share it
+    // is a DriverTable, so no checkpoint is needed to share it
     val uni = lmUnigrams(docs, idCol, textCol, vocabSize)
     lmScoreWith(docs, idCol, textCol, uni,
       lmBigramsWith(docs, textCol, uni), passThrough)
@@ -227,7 +221,7 @@ object LangModel {
       langCol: String,
       vocabSize: Int = 64,
       exact: Boolean = true): DataFrame = {
-    val uni = lmUnigrams(docs, idCol, textCol, vocabSize) // local relation
+    val uni = lmUnigrams(docs, idCol, textCol, vocabSize) // a DriverTable
     val scored = lmScoreWith(docs, idCol, textCol, uni,
         lmBigramsWith(docs, textCol, uni),
         passThrough = Seq(langCol))

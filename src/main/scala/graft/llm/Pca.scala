@@ -133,8 +133,7 @@ object Pca {
       val s = if (v(best) < 0) -1.0 else 1.0
       (0 until dim).map(d => Row(c, d, s * v(d), eigvals(src)))
     } ++ (0 until dim).map(d => Row(-1, d, mean(d), 0.0))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
+    DriverTable(spark,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("comp",
           org.apache.spark.sql.types.IntegerType, nullable = false),
@@ -143,7 +142,8 @@ object Pca {
         org.apache.spark.sql.types.StructField("loading",
           org.apache.spark.sql.types.DoubleType, nullable = false),
         org.apache.spark.sql.types.StructField("eigval",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+          org.apache.spark.sql.types.DoubleType, nullable = false))),
+      rows)
   }
 
   /** Project every vector onto a trained model: (vec_id, comp,

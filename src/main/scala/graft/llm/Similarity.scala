@@ -204,8 +204,12 @@ object Similarity {
   }
 
   /** (cell, vec_id, vn, nn, c_cos): per-row compiled-kernel argmax over
-    * the LITERAL flattened centroid matrix plus a broadcast index→cell
-    * join — a pure projection; no corpus shuffle, no aggregate. */
+    * the LITERAL flattened centroid matrix plus a positional lookup of
+    * the winning index in a literal array of the cell ids
+    * ([[Clustering.centroidIds]]) — a pure projection; no corpus
+    * shuffle, no aggregate, no join. `base` holds no NULL vector (its
+    * norm > 0 filter drops them), so the kernel's index is never NULL
+    * and every row gets the cell at that index. */
   private def kernelAssigned(
       base: DataFrame,
       centRows: Seq[org.apache.spark.sql.Row],
@@ -214,15 +218,6 @@ object Similarity {
     val flat = graft.functions.GraftVecOps.flatMatrix(cvecs)
     val dim = cvecs.head.length
     val ncs = centRows.map(_.getDouble(2))
-    val spark = base.sparkSession
-    val idxToCell = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(
-        centRows.toIndexedSeq.zipWithIndex.map { case (r, ix) =>
-          org.apache.spark.sql.Row(ix, r.get(0)) }).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(
-          "__ci", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cell", cellType, nullable = true))))
     base
       .select(col("vec_id"), col("v").as("vn"), col("norm").as("nn"),
         graft.functions.HashFunctions.bestCosine(
@@ -230,8 +225,10 @@ object Similarity {
       .select(col("vec_id"), col("vn"), col("nn"),
         col("__best").getItem(0).cast("int").as("__ci"),
         col("__best").getItem(1).as("c_cos"))
-      .join(broadcast(idxToCell), Seq("__ci"))
-      .select(col("cell"), col("vec_id"), col("vn"), col("nn"), col("c_cos"))
+      .select(
+        element_at(Clustering.centroidIds(centRows.map(_.get(0)), cellType),
+          col("__ci") + 1).as("cell"),
+        col("vec_id"), col("vn"), col("nn"), col("c_cos"))
   }
 
   /** IVF index postings for a vector batch against a quantizer — the
@@ -271,7 +268,7 @@ object Similarity {
     * same k-row cost, paid once at plan build), so each corpus vector's
     * best cell comes from a per-row compiled kernel over the LITERAL
     * flattened centroid matrix ([[graft.functions.GraftVecOps
-    * .bestCosine]]) plus a broadcast index→id join — a pure projection.
+    * .bestCosine]]) plus a literal index→id lookup — a pure projection.
     * The previous `join(broadcast) → groupBy(vec_id) → max_by +
     * first(v/norm)` spelling shuffled the corpus (vectors included) and,
     * because struct/array aggregation buffers are UnsafeRow-immutable,
@@ -314,17 +311,15 @@ object Similarity {
     // centroid join + rank window run over a tiny frame. The centroid
     // side is rebuilt from the rows just collected (a local k-row frame):
     // re-using the `centroids` plan here would re-run its corpus scan.
-    val localCents = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(
-        centRows.toIndexedSeq.map(r =>
-          org.apache.spark.sql.Row(r.get(0), r.getSeq[Double](1), r.getDouble(2)))).asJava,
+    val localCents = DriverTable(spark,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("centroid_id", cellType, nullable = true),
         org.apache.spark.sql.types.StructField("vc",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType, containsNull = false), nullable = false),
         org.apache.spark.sql.types.StructField("nc",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+          org.apache.spark.sql.types.DoubleType, nullable = false))),
+      centRows)
     val scoredProbes = base
       .filter(col("vec_id").isin(queryIds: _*))
       .join(broadcast(localCents))

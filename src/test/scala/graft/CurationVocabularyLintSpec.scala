@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lint guard: each curation verdict reason is spelled as a string
@@ -18,17 +13,8 @@ class CurationVocabularyLintSpec extends AnyFunSuite {
     "low_lp", "contaminated", "near_duplicate")
 
   test("each curation reason literal appears in at most one src/main/scala file") {
-    val root = Paths.get("src", "main", "scala")
-    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    val walk = Files.walk(root)
-    val sources: Seq[(Path, String)] =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .map(p => p -> new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-        .toList
-      finally walk.close()
     val spread = Reasons.map { r =>
-      r -> sources.collect { case (p, text) if text.contains("\"" + r + "\"") => p.toString }.sorted
+      r -> MainSources.all.collect { case (p, text) if text.contains("\"" + r + "\"") => p.toString }.sorted
     }.filter(_._2.size > 1)
     assert(spread.isEmpty,
       "reason literals in more than one file — name the gate through " +

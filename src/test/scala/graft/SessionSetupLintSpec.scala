@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,17 +13,10 @@ class SessionSetupLintSpec extends AnyFunSuite {
   private val Builder = """SparkSession\s*\.\s*builder\b""".r
 
   test("only LocalSession.scala builds a SparkSession in src/main/scala") {
-    val root = Paths.get("src", "main", "scala")
-    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    val walk = Files.walk(root)
-    val counts: Map[Path, Int] =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .map(p => p -> Builder.findAllMatchIn(
-          new String(Files.readAllBytes(p), StandardCharsets.UTF_8)).size)
-        .filter(_._2 > 0)
-        .toMap
-      finally walk.close()
+    val counts: Map[Path, Int] = MainSources.all
+      .map { case (p, text) => p -> Builder.findAllMatchIn(text).size }
+      .filter(_._2 > 0)
+      .toMap
     val offenders = counts.keys.filter(_.getFileName.toString != "LocalSession.scala")
     assert(offenders.isEmpty,
       s"SparkSession.builder() outside LocalSession.scala — call graft.LocalSession() " +

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,5 +24,28 @@ abstract class SparkSpec extends AnyFunSuite {
     val s = SparkSpec.spark
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Spark jobs started while `body` runs on this thread, told apart
+    * from other suites' jobs by a job group of their own. */
+  protected def jobsOf(body: => Any): Int = {
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      body
+      Thread.sleep(1500) // listener events post asynchronously
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

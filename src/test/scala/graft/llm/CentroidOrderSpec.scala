@@ -1,9 +1,6 @@
 package graft.llm
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -176,28 +173,6 @@ class CentroidOrderSpec extends SparkSpec {
         queryIds = Seq(1L), k = 10, nProbes = 1)
         .select("neighbor_id").as[Long].collect().toSet
       assert(found == eCell && found == Set(2L, 3L, 6L), name)
-    }
-  }
-
-  /** Spark jobs started while `body` runs, told apart by job group. */
-  private def jobsOf(body: => Any): Int = {
-    val group = s"centroid-order-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      body
-      Thread.sleep(1500) // listener events post asynchronously
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
   }
 

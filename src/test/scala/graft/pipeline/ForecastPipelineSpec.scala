@@ -107,19 +107,12 @@ class ForecastPipelineSpec extends SparkSpec {
       latFirstMicro = 1000000, lonFirstMicro = 2000000, incMicro = 50000,
       scanMode = 0, timeUnit = 1, forecastTime = 24, member = Some(1),
       r = 0f, e = 0, d = 0, nbits = 8, xs = Seq(1L, 2L, 3L, 4L))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      df = ForecastPipeline.readGrib(spark, s"$dir/*.grib2", FloodConfig())
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = ForecastPipeline.readGrib(spark, s"$dir/*.grib2", FloodConfig())
-      Thread.sleep(1500) // listener events post asynchronously
-      assert(jobs.get() == 0, s"guard launched ${jobs.get()} Spark job(s)")
-      assert(df.count() === 4) // the frame itself still reads
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs == 0, s"guard launched $jobs Spark job(s)")
+    assert(df.count() === 4) // the frame itself still reads
   }
 
   test("run() rejects a step_hours column that is not 1:1 with step; Some(Nil) opts out") {
